@@ -646,12 +646,12 @@ def logreg_fit(
         # pass), and build the whole pass as SQL STRINGS (r11: each
         # Column node costs a py4j round-trip, so at p=17 plan BUILD
         # was ~1.0s of the ~1.5s pass — strings take ~0.02s; trajectory
-        # bit-identical, pinned against the Column-API form in
-        # tests/test_features.py). The eta chain stays LEFT-ASSOC
-        # (same fold order as the original Column chain — a balanced
-        # chunked fold would change the doubles); fine for the
-        # full-Newton path's moderate p (the dim>32 scale path is
-        # logreg_fit_gd, which chunks).
+        # bit-identical to the Column-API form it replaced; the fits are
+        # pinned against numpy IRLS references in tests/test_features.py).
+        # The eta chain stays LEFT-ASSOC (same fold order as the original
+        # Column chain — a balanced chunked fold would change the
+        # doubles); fine for the full-Newton path's moderate p (the
+        # dim>32 scale path is logreg_fit_gd, which chunks).
         eta_sql = _dlit(beta[-1])
         for j, c in enumerate(x_cols):
             eta_sql = f"({eta_sql} + ({_dlit(beta[j])} * `{c}`))"

@@ -26,7 +26,6 @@ class Step:
 class Pipeline:
     original: DataFrame
     steps: list[Step] = field(default_factory=list)
-    _cache_current: bool = False
 
     def apply(self, name: str, fn: Callable[[DataFrame], DataFrame]) -> "Pipeline":
         """Record and apply a step; returns self for chaining (M4 log append,

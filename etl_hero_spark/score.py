@@ -11,20 +11,12 @@ from etl_hero_spark.profile import duplicate_count, null_counts
 _BASE, _W_NULL, _W_DUP = 50.0, 0.5, 1.0
 
 
-def _table_badness(df: DataFrame) -> tuple[int, int]:
-    """(total nulls, duplicate rows) in two small jobs (one scan each)."""
-    nulls = null_counts(df).first()["n_null_total"]
-    dups = duplicate_count(df).first()["n_duplicates"]
-    return int(nulls), int(dups)
-
-
 def quality_score(before: DataFrame, after: DataFrame) -> float:
     """M1 (compute_quality_score, app.py:83-92):
-    clamp(50 + 0.5*max(0, d_nulls) + 1.0*max(0, d_dups), 0, 100), 2dp."""
-    nb, db = _table_badness(before)
-    na, da = _table_badness(after)
-    score = _BASE + _W_NULL * max(0, nb - na) + _W_DUP * max(0, db - da)
-    return round(max(0.0, min(100.0, score)), 2)
+    clamp(50 + 0.5*max(0, d_nulls) + 1.0*max(0, d_dups), 0, 100), 2dp.
+    One action over the lazy ``quality_score_df`` plan (scores are
+    multiples of 0.5, so Spark's HALF_UP round equals Python's)."""
+    return float(quality_score_df(before, after).first()["quality_score"])
 
 
 def quality_score_df(before: DataFrame, after: DataFrame) -> DataFrame:

@@ -38,7 +38,10 @@ def test_compact_line_fits_tail_window():
 
 
 def test_prior_round_times_prefers_snapshot():
-    prev, prev_sf = bench.prior_round_times()
+    here = os.path.dirname(bench.__file__)
+    prev, prev_sf = bench.prior_times(
+        [os.path.join(here, "BENCH_PREV.json"), *bench.round_files("BENCH_r")]
+    )
     # BENCH_PREV.json is committed; every headline query must have a
     # prior time so the vs_prev gate covers the full set
     assert prev, "BENCH_PREV.json missing or empty"
@@ -78,7 +81,7 @@ def test_prior_full_times_never_self_compares():
     assert committed, "no committed full sweeps to test against"
     newest = committed[-1]
     # unconstrained: newest wins
-    prev_any, _ = bench.prior_full_times()
+    prev_any, _ = bench.prior_times(bench.round_files("BENCH_FULL_r"))
     with open(
         os.path.join(here, f"BENCH_FULL_r{newest:02d}.json")
     ) as f:
@@ -86,7 +89,9 @@ def test_prior_full_times_never_self_compares():
     assert prev_any == newest_q
     # in-flight round == newest committed round: must fall back to the
     # one before it (or empty when there is no earlier sweep)
-    prev_excl, _ = bench.prior_full_times(exclude_round=newest)
+    prev_excl, _ = bench.prior_times(
+        bench.round_files("BENCH_FULL_r", before=newest)
+    )
     assert prev_excl != newest_q or len(committed) == 1
     if len(committed) >= 2:
         with open(
@@ -97,7 +102,9 @@ def test_prior_full_times_never_self_compares():
             older_q = json.load(f)["queries"]
         assert prev_excl == older_q
     # excluding everything yields the empty prior, not a crash
-    assert bench.prior_full_times(exclude_round=committed[0]) == ({}, 0.1)
+    assert bench.prior_times(
+        bench.round_files("BENCH_FULL_r", before=committed[0])
+    ) == ({}, 0.1)
 
 
 def test_absorbed_prior_sums_components():
@@ -246,16 +253,24 @@ def test_aggregate_gate_is_absorption_aware():
     assert agg["ratio"] == 1.0 and not agg["flagged"]
 
 
-def test_run_full_rejects_nonstandard_filename():
-    """ADVICE r8: a nonstandard out_path would silently revert to
-    intra-round self-comparison — run_full must fail loudly before
-    touching Spark."""
+def test_run_full_rejects_nonstandard_filename(monkeypatch):
+    """ADVICE r8: a nonstandard --full output path would silently revert
+    to intra-round self-comparison — the full run must fail loudly
+    before touching Spark."""
     import pytest
 
-    with pytest.raises(SystemExit, match="BENCH_FULL_r"):
-        bench.run_full("BENCH_FULL.json")
-    with pytest.raises(SystemExit, match="BENCH_FULL_r"):
-        bench.run_full("/tmp/sweep_output.json")
+    def no_spark(*args, **kwargs):
+        raise AssertionError("the full run started before the name check")
+
+    monkeypatch.setattr(bench, "run", no_spark)
+    for argv in (
+        ["bench.py", "--full"],
+        ["bench.py", "--full", "BENCH_FULL.json"],
+        ["bench.py", "--full", "/tmp/sweep_output.json"],
+    ):
+        monkeypatch.setattr(sys, "argv", argv)
+        with pytest.raises(SystemExit, match="BENCH_FULL_r"):
+            bench.main()
 
 
 def test_absorber_without_own_prior_has_no_prior():
@@ -330,3 +345,20 @@ def test_queries_for_line_real_snapshot_coverage():
     assert len(json.dumps(base, separators=(",", ":"))) <= DRIVER_TAIL_CHARS
     missing_big = [n for n, t in times.items() if t >= 1.5 and n not in q]
     assert missing_big == [], missing_big
+
+
+def test_queries_for_line_is_a_strict_cost_ordered_prefix():
+    """ADVICE r11: once a query does not fit, no cheaper query may get in
+    after it — the line is a prefix of the cost order, so a reader can
+    tell that every omitted query is cheaper than every listed one."""
+    base = {"metric": "headline_queries_total", "detail": "BENCH_DETAIL.json"}
+    times = {
+        "a": 9.0,
+        "b": 8.0,
+        "c_" + "x" * 60: 7.0,  # expensive, long name: will not fit
+        "d": 1.0,  # cheaper, short name: would fit in the space left
+    }
+    ab = {**base, "queries": {"a": 9.0, "b": 8.0}}
+    fits_ab = len(json.dumps(ab, separators=(",", ":")))
+    q = bench.queries_for_line(times, base, budget=fits_ab + 20)
+    assert q == {"a": 9.0, "b": 8.0}

@@ -8,11 +8,12 @@ shadowed the earlier one, and nothing failed because the bodies happened
 to match. This test makes any future top-level re-definition (function,
 class, or module constant shadowed by a later def) a hard CI failure.
 
-Scope: every ``*.py`` under ``etl_hero_spark/`` plus the repo-root entry
-points. Only *unconditional* top-level definitions count — a name defined
-once in a ``try:`` and again in its ``except:`` (the optional-dependency
-gate pattern) is two branches of one definition, not a shadow, so defs
-nested inside If/Try at module level are exempt.
+Scope: every ``*.py`` under ``etl_hero_spark/``, the repo-root entry
+points and the ``tools/`` scripts. Only *unconditional* top-level
+definitions count — a name defined once in a ``try:`` and again in its
+``except:`` (the optional-dependency gate pattern) is two branches of one
+definition, not a shadow, so defs nested inside If/Try at module level
+are exempt.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ PACKAGE = REPO / "etl_hero_spark"
 MODULES = sorted(PACKAGE.rglob("*.py")) + [
     REPO / "__spark_entry__.py",
     REPO / "bench.py",
+    *sorted((REPO / "tools").glob("*.py")),
 ]
 
 
