@@ -131,19 +131,15 @@ def distinct_counts(
     df: DataFrame,
     cols: list[str] | None = None,
     approx: bool = False,
-    parallel: bool = True,
 ) -> DataFrame:
     """One row of n_unique_<c>. approx=True -> HLL++ in ONE pass (no Expand,
     no per-value shuffle — the 100 TB default). Exact path (oracle-checked)
-    uses concurrent per-column jobs (see distinct_counts_map); parallel=False
-    falls back to the single Expand-based agg plan."""
+    uses concurrent per-column jobs (see distinct_counts_map)."""
     cols = cols or df.columns
     if approx:
         return df.agg(
             *[F.approx_count_distinct(c).alias(f"n_unique_{c}") for c in cols]
         )
-    if not parallel:
-        return df.agg(*[F.countDistinct(c).alias(f"n_unique_{c}") for c in cols])
     counts = distinct_counts_map(df, cols)
     return df.sparkSession.createDataFrame(
         [tuple(counts[c] for c in cols)],
@@ -172,25 +168,18 @@ def duplicate_count(df: DataFrame, subset: list[str] | None = None) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def numeric_stats(
-    df: DataFrame, cols: list[str] | None = None, exact_decimal: bool = True
-) -> DataFrame:
-    """One row with mean_/std_/min_/max_ per numeric column.
-
-    exact_decimal=True -> order-independent, oracle-parity aggregation;
-    False -> plain double aggregation (faster, last-ulp nondeterministic).
-    """
+def numeric_stats(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+    """One row with mean_/std_/min_/max_ per numeric column, the mean and
+    std from exact decimal sums (order-independent, oracle-parity)."""
     cols = cols or numeric_columns(df)
     exprs: list[Column] = []
     for c in cols:
-        if exact_decimal:
-            exprs += [dec_avg(c, f"mean_{c}"), dec_stddev_pop(c, f"std_{c}")]
-        else:
-            exprs += [
-                F.avg(c).alias(f"mean_{c}"),
-                F.stddev_pop(c).alias(f"std_{c}"),
-            ]
-        exprs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
+        exprs += [
+            dec_avg(c, f"mean_{c}"),
+            dec_stddev_pop(c, f"std_{c}"),
+            F.min(c).alias(f"min_{c}"),
+            F.max(c).alias(f"max_{c}"),
+        ]
     return df.agg(*exprs)
 
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_hero_spark.profile import duplicate_count, null_counts
+from etl_hero_spark.profile import null_counts
 
 # reference weights, app.py:88-91
 _BASE, _W_NULL, _W_DUP = 50.0, 0.5, 1.0
@@ -20,18 +20,25 @@ def quality_score(before: DataFrame, after: DataFrame) -> float:
 
 
 def quality_score_df(before: DataFrame, after: DataFrame) -> DataFrame:
-    """Lazy single-row variant: (nulls_before, nulls_after, dups_before,
-    dups_after, quality_score) — oracle-checkable as one SQL expression."""
+    """Lazy single-row variant: (nulls_before, dups_before, nulls_after,
+    dups_after, quality_score) — oracle-checkable as one SQL expression.
+
+    Each table's two counts come from the one groupBy-all-columns that
+    duplicate_count runs: n_duplicates = sum(cnt - 1) and nulls =
+    sum(cnt * nulls in the group key). NULL keys group together, so the
+    second sum equals null_counts' n_null_total."""
 
     def one(df: DataFrame, tag: str) -> DataFrame:
-        return (
-            null_counts(df)
-            .select(F.col("n_null_total").alias(f"nulls_{tag}"))
-            .crossJoin(
-                duplicate_count(df).select(
-                    F.col("n_duplicates").alias(f"dups_{tag}")
-                )
-            )
+        cols = df.columns
+        key_nulls = sum(F.col(c).isNull().cast("bigint") for c in cols)
+        groups = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("_cnt"))
+        return groups.agg(
+            F.coalesce(F.sum(F.col("_cnt") * key_nulls), F.lit(0))
+            .cast("bigint")
+            .alias(f"nulls_{tag}"),
+            F.coalesce(F.sum(F.col("_cnt") - 1), F.lit(0))
+            .cast("bigint")
+            .alias(f"dups_{tag}"),
         )
 
     joined = one(before, "before").crossJoin(one(after, "after"))

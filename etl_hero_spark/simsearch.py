@@ -1,13 +1,25 @@
 """Similarity search over embedding columns (extension mandate).
 
-Two rungs:
-* brute-force cosine top-k — the exact baseline: broadcast the (small)
-  query set, one linear scan of the corpus, per-query top-k via window.
-  At 100 TB this is still the right shape when the query set is small:
-  no shuffle of the corpus, only of the (n_queries x k) result.
-* LSH-bucketed ANN (random hyperplane signatures) — the scale path when
-  the query set is large or latency matters: candidates share a signature
-  bucket, exact rerank inside buckets only.
+Rungs:
+* brute-force cosine top-k (topk_cosine) — the exact baseline: broadcast
+  the (small) query set, one linear scan of the corpus, per-query top-k
+  via window. No shuffle of the corpus, only of the (n_queries x k)
+  result.
+* LSH-bucketed ANN (topk_cosine_lsh) — candidates share a hyperplane
+  signature bucket, exact rerank inside buckets only.
+* IVF (topk_cosine_ivf) — coarse k-means lists, probe the nearest few.
+* compressed scans with exact rerank: PQ (topk_cosine_pq) and int8 SQ8
+  (topk_cosine_sq8).
+
+Five persisted layouts, each written by write_<kind>_index and grown by
+append_<kind>_batch under the frozen model: IVF, SQ8, IVF-SQ8, IVF-PQ
+and residual IVF-PQ. Each layout's rows come from ONE encoder
+(_ivf_encode, sq8_encode, _ivfsq8_encode, _ivfpq_encode,
+_ivfpq_residual_encode) shared by its writer and its append, so appended
+rows are encoded exactly like built ones. _write_index_model writes the
+centroid/codebook model, read_index_model reads it back for appends and
+searches alike, and _exact_rerank is the one exact-cosine tail of the
+compressed searches.
 
 Vectors are quantized to 3dp doubles before scoring so dot products are
 bit-identical across engines (see registry oracle) — quantization is an
@@ -16,6 +28,8 @@ score raw floats.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -84,6 +98,42 @@ def topk_cosine(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "corpus_id", "score", "rank")
+    )
+
+
+def _top_per_query(df: DataFrame, by: str, n: int, rank: str) -> DataFrame:
+    """The first ``n`` rows per query_id by (``by`` DESC, corpus_id ASC),
+    numbered in column ``rank``."""
+    w = W.partitionBy("query_id").orderBy(F.desc(by), F.asc("corpus_id"))
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= n)
+
+
+def _exact_rerank(
+    scored: DataFrame,
+    approx: str,
+    vecs: DataFrame,
+    q: DataFrame,
+    k: int,
+    rerank_factor: int,
+) -> DataFrame:
+    """Exact tail of the compressed searches (PQ, SQ8, IVF-PQ, IVF-SQ8):
+    the top k*rerank_factor candidates per query by the approximate
+    column ``approx`` join back their cv from ``vecs`` and the query's
+    qv from ``q``, and rank by the exact 6dp cosine — so a rerank over
+    every row equals topk_cosine. The bounded candidate set (n_queries
+    * k * factor rows) is what broadcasts; the corpus never shuffles.
+    Output (query_id, corpus_id, score, rank)."""
+    cand = _top_per_query(scored, approx, k * rerank_factor, "_r").select(
+        "query_id", "corpus_id"
+    )
+    rer = (
+        vecs.select("corpus_id", "cv")
+        .join(F.broadcast(cand), "corpus_id")
+        .join(F.broadcast(q.select("query_id", "qv")), "query_id")
+        .withColumn("score", F.round(cosine_expr(F.col("cv"), F.col("qv")), 6))
+    )
+    return _top_per_query(rer, "score", k, "rank").select(
+        "query_id", "corpus_id", "score", "rank"
     )
 
 
@@ -199,11 +249,8 @@ def topk_cosine_lsh(
         # a candidate can share several probed buckets with the same query;
         # dedup before ranking (identical score rows — any survivor works)
         scored = scored.dropDuplicates(["query_id", "corpus_id"])
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
+    return _top_per_query(scored, "score", k, "rank").select(
+        "query_id", "corpus_id", "score", "rank"
     )
 
 
@@ -459,25 +506,33 @@ def write_ivf_index(
             corpus, n_centroids=n_centroids, vec_col=vec_col
         )
     spark = corpus.sparkSession
-    spark.createDataFrame(
-        [
-            (i, [float(v) for v in c], -1 if quantize is None else quantize)
-            for i, c in enumerate(centroids)
-        ],
-        "list_id int, centroid array<double>, quantize int",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    assignments = ensure_min_partitions(corpus).select(
-        F.col(id_col).alias("corpus_id"),
-        quantized_vec(vec_col, quantize).alias("cv"),
-        nearest_lists_expr(vec_col, centroids, 1, dp=quantize)[0].alias(
-            "list_id"
-        ),
-    )
-    assignments.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/lists"
-    )
+    _write_index_model(spark, path, quantize, centroids=centroids)
+    _ivf_encode(corpus, centroids, quantize, id_col, vec_col).write.mode(
+        "overwrite"
+    ).partitionBy("list_id").parquet(f"{path}/lists")
     write_index_meta(spark, path, "ivf", quantize)
     return centroids
+
+
+def _ivf_encode(
+    df: DataFrame,
+    cents: list,
+    quantize: int | None,
+    id_col: str,
+    vec_col: str,
+    *extra: Column,
+) -> DataFrame:
+    """The IVF encode, shared by write_ivf_index and append_ivf_batch:
+    (corpus_id, list_id, *extra, cv), list_id the nearest centroid
+    computed over the RAW vector attribute (see _dot_const_sql). The
+    IVF-PQ encode adds its codes as ``extra`` columns of the same
+    projection; the IVF-SQ8 and residual encodes stage this frame."""
+    return ensure_min_partitions(df).select(
+        F.col(id_col).alias("corpus_id"),
+        nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias("list_id"),
+        *extra,
+        quantized_vec(vec_col, quantize).alias("cv"),
+    )
 
 
 def topk_cosine_ivf_indexed(
@@ -493,13 +548,7 @@ def topk_cosine_ivf_indexed(
     stored centroid model and probes the list_id-partitioned assignment
     table — the corpus embeddings are never rescanned. Same output as
     topk_cosine_ivf with the same centroids (asserted in tests)."""
-    cent_rows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(),
-        key=lambda r: r["list_id"],
-    )
-    centroids = [list(r["centroid"]) for r in cent_rows]
-    quantize = cent_rows[0]["quantize"]
-    quantize = None if quantize < 0 else quantize
+    centroids, _books, quantize, _meta = read_index_model(spark, path)
     index = spark.read.parquet(f"{path}/lists")
     nprobe = min(nprobe, len(centroids))
     return _ivf_probe_rerank(
@@ -831,29 +880,7 @@ def topk_cosine_pq(
             pq_adc_score_expr("codes", "tabs", m) / F.col("cnorm"), 6
         ),
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("corpus_id"))
-    cand = (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select("query_id", "corpus_id")
-    )
-    # exact rerank: the bounded candidate set (n_queries * k * factor
-    # rows) broadcasts back against the raw vectors — the corpus never
-    # shuffles
-    rer = (
-        enc.select("corpus_id", "cv")
-        .join(F.broadcast(cand), "corpus_id")
-        .join(F.broadcast(q.select("query_id", "qv")), "query_id")
-        .withColumn(
-            "score", F.round(cosine_expr(F.col("cv"), F.col("qv")), 6)
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("corpus_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
-    )
+    return _exact_rerank(scored, "adc", enc, q, k, rerank_factor)
 
 
 def write_pq_index(
@@ -875,16 +902,9 @@ def write_pq_index(
     books = codebooks or train_pq_codebooks(
         corpus, m=m, k_sub=k_sub, vec_col=vec_col
     )
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        [
-            (j, c, [float(v) for v in cent],
-             -1 if quantize is None else quantize)
-            for j, book in enumerate(books)
-            for c, cent in enumerate(book)
-        ],
-        "subspace int, code int, centroid array<double>, quantize int",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
+    _write_index_model(
+        corpus.sparkSession, path, quantize, codebooks=books, books_quantize=True
+    )
     enc = ensure_min_partitions(corpus).select(
         F.col(id_col).alias("corpus_id"),
         pq_codes_expr(vec_col, books, dp=quantize).alias("codes"),
@@ -941,37 +961,67 @@ def write_ivfpq_index(
         corpus, m=m, k_sub=k_sub, vec_col=vec_col
     )
     spark = corpus.sparkSession
-    spark.createDataFrame(
-        [
-            (i, [float(v) for v in c], -1 if quantize is None else quantize)
-            for i, c in enumerate(cents)
-        ],
-        "list_id int, centroid array<double>, quantize int",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [
-            (j, c, [float(v) for v in cent])
-            for j, book in enumerate(books)
-            for c, cent in enumerate(book)
-        ],
-        "subspace int, code int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    enc = ensure_min_partitions(corpus).select(
-        F.col(id_col).alias("corpus_id"),
-        nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias(
-            "list_id"
-        ),
-        pq_codes_expr(vec_col, books, dp=adc_dp).alias("codes"),
-        F.round(norm_expr(quantized_vec(vec_col, quantize)), 9).alias(
-            "cnorm"
-        ),
-        quantized_vec(vec_col, quantize).alias("cv"),
-    )
-    enc.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/codes"
-    )
+    _write_index_model(spark, path, quantize, centroids=cents, codebooks=books)
+    _ivfpq_encode(
+        corpus, cents, books, quantize, adc_dp, id_col, vec_col
+    ).write.mode("overwrite").partitionBy("list_id").parquet(f"{path}/codes")
     write_index_meta(spark, path, "ivfpq", quantize, adc_dp=adc_dp)
     return cents, books
+
+
+def _ivfpq_encode(
+    df: DataFrame,
+    cents: list,
+    books: list,
+    quantize: int | None,
+    adc_dp: int | None,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The IVF-PQ encode, shared by write_ivfpq_index and
+    append_ivfpq_batch: (corpus_id, list_id, codes, cnorm, cv) in one
+    projection over the raw vector attribute."""
+    return _ivf_encode(
+        df,
+        cents,
+        quantize,
+        id_col,
+        vec_col,
+        pq_codes_expr(vec_col, books, dp=adc_dp).alias("codes"),
+        F.round(norm_expr(quantized_vec(vec_col, quantize)), 9).alias("cnorm"),
+    )
+
+
+def _write_index_model(
+    spark,
+    path: str,
+    quantize: int | None,
+    centroids: list | None = None,
+    codebooks: list | None = None,
+    books_quantize: bool = False,
+) -> None:
+    """Write an index's bounded model, read back by read_index_model:
+    {path}/centroids (list_id, centroid, quantize) and/or
+    {path}/codebooks (subspace, code, centroid). The flat PQ index has
+    no centroid table and records quantize as a codebook column
+    (``books_quantize``)."""
+    q = -1 if quantize is None else quantize
+    if centroids is not None:
+        spark.createDataFrame(
+            [(i, [float(v) for v in c], q) for i, c in enumerate(centroids)],
+            "list_id int, centroid array<double>, quantize int",
+        ).write.mode("overwrite").parquet(f"{path}/centroids")
+    if codebooks is not None:
+        extra = (q,) if books_quantize else ()
+        spark.createDataFrame(
+            [
+                (j, c, [float(v) for v in cent], *extra)
+                for j, book in enumerate(codebooks)
+                for c, cent in enumerate(book)
+            ],
+            "subspace int, code int, centroid array<double>"
+            + (", quantize int" if books_quantize else ""),
+        ).write.mode("overwrite").parquet(f"{path}/codebooks")
 
 
 def topk_cosine_ivfpq_indexed(
@@ -1000,30 +1050,45 @@ def topk_cosine_ivfpq_indexed(
     cost lives in the index BUILD, paid once). A large query batch
     belongs in topk_cosine_pq, whose expression path is distributed.
     """
+    return _ivfpq_probe(
+        spark, queries, path, k, nprobe, rerank_factor, query_id_col,
+        vec_col, adc_dp, residual=False,
+    )
+
+
+def _ivfpq_probe(
+    spark,
+    queries: DataFrame,
+    path: str,
+    k: int,
+    nprobe: int,
+    rerank_factor: int,
+    query_id_col: str,
+    vec_col: str,
+    adc_dp: int | None,
+    residual: bool,
+) -> DataFrame:
+    """The IVF-PQ search behind both public forms. The residual form
+    adds each (query, list) coarse dot q.centroid[list] as a ``qdotc``
+    probe column to the ADC sum, and rejects an empty query set."""
     import numpy as np
 
-    cent_rows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(),
-        key=lambda r: r["list_id"],
+    cents, books, quantize, _meta = read_index_model(
+        spark, path, with_books=True
     )
-    cents = np.asarray([list(r["centroid"]) for r in cent_rows])
-    quantize = cent_rows[0]["quantize"]
-    quantize = None if quantize < 0 else quantize
-    book_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    mm = 1 + max(r["subspace"] for r in book_rows)
-    books: list[list[list[float]]] = [[] for _ in range(mm)]
-    for r in sorted(book_rows, key=lambda r: (r["subspace"], r["code"])):
-        books[r["subspace"]].append(list(r["centroid"]))
+    cents = np.asarray(cents)
     nprobe = min(nprobe, len(cents))
     q_rows = queries.select(
         F.col(query_id_col).alias("query_id"),
         quantized_vec(vec_col, quantize).alias("qv"),
     ).collect()
+    if residual and not q_rows:
+        raise ValueError("queries is empty")
     # the driver-rebuilt probe/query frames must carry the CALLER's id
     # type — the index accepts any id type at build, so hardcoding long
     # here would reject string or wide ids that built fine (ADVICE r3)
     qid_type = queries.schema[query_id_col].dataType.simpleString()
-    sub = len(books[0][0])
+    mm, sub = len(books), len(books[0][0])
     probe_data, qv_data = [], []
     for r in q_rows:
         v = np.asarray(r["qv"], dtype=np.float64)
@@ -1040,11 +1105,13 @@ def topk_cosine_ivfpq_indexed(
             for j in range(mm)
         ]
         for li in lists:
-            probe_data.append((r["query_id"], li, tabs))
+            qdotc = (float(cents[li] @ v),) if residual else ()
+            probe_data.append((r["query_id"], li, tabs, *qdotc))
         qv_data.append((r["query_id"], [float(x) for x in r["qv"]]))
     probes = spark.createDataFrame(
         probe_data,
-        f"query_id {qid_type}, list_id int, tabs array<array<double>>",
+        f"query_id {qid_type}, list_id int, tabs array<array<double>>"
+        + (", qdotc double" if residual else ""),
     )
     q = spark.createDataFrame(
         qv_data, f"query_id {qid_type}, qv array<double>"
@@ -1053,36 +1120,15 @@ def topk_cosine_ivfpq_indexed(
     codes = spark.read.parquet(f"{path}/codes").filter(
         F.col("list_id").isin(probed_lists)
     )
+    adc = pq_adc_score_expr("codes", "tabs", mm)
+    if residual:
+        adc = F.col("qdotc") + adc
     scored = (
         codes.drop("cv")
         .join(F.broadcast(probes), "list_id")
-        .withColumn(
-            "adc",
-            F.round(
-                pq_adc_score_expr("codes", "tabs", mm) / F.col("cnorm"), 6
-            ),
-        )
+        .withColumn("adc", F.round(adc / F.col("cnorm"), 6))
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("corpus_id"))
-    cand = (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select("query_id", "corpus_id")
-    )
-    rer = (
-        codes.select("corpus_id", "cv")
-        .join(F.broadcast(cand), "corpus_id")
-        .join(F.broadcast(q.select("query_id", "qv")), "query_id")
-        .withColumn(
-            "score", F.round(cosine_expr(F.col("cv"), F.col("qv")), 6)
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("corpus_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
-    )
+    return _exact_rerank(scored, "adc", codes, q, k, rerank_factor)
 
 
 def kmeans_init(
@@ -1403,46 +1449,75 @@ def sq8_encode(
     last deterministically)."""
     from etl_hero_spark.checkpoint import parquet_checkpoint
 
-    dim_row = corpus.select(F.size(vec_col).alias("d")).first()
-    if dim_row is None:
-        # EMPTY input (an empty append batch): the encode of nothing
-        # is a correctly-shaped empty frame, not a crash (pinned in
-        # tests/test_simsearch.py — append_*_batch no-op contract)
-        return corpus.select(
+    enc = _with_sq8_codes(
+        ensure_min_partitions(corpus).select(
             F.col(id_col).alias("corpus_id"),
             quantized_vec(vec_col, quantize).alias("cv"),
-            F.lit(1.0).alias("sq_scale"),
-            F.expr("cast(array() as array<int>)").alias("sq_codes"),
-            F.lit(0.0).alias("cnorm"),
-        ).filter(F.lit(False))
-    dim = int(dim_row["d"])
-    # scale derives from the QUANTIZED cv (the values the codes are
-    # built from) — deriving it from the raw vector lets rounding push
-    # a coordinate above the raw max and a code outside [-127, 127].
-    mx = F.expr(
-        "greatest("
-        + ", ".join(f"abs(cv[{i}])" for i in range(dim))
-        + ")"
-    )
-    scale = F.when(mx > 0, mx / 127.0).otherwise(F.lit(1.0))
-    staged = ensure_min_partitions(corpus).select(
-        F.col(id_col).alias("corpus_id"),
-        quantized_vec(vec_col, quantize).alias("cv"),
-    ).select(
-        "corpus_id",
-        "cv",
-        scale.alias("sq_scale"),
-    )
-    enc = staged.select(
-        "corpus_id",
-        "cv",
-        "sq_scale",
-        F.expr(
-            "transform(cv, x -> cast(round(x / sq_scale) as int))"
-        ).alias("sq_codes"),
-        F.round(norm_expr(F.col("cv")), 9).alias("cnorm"),
+        ),
+        _vec_dim(corpus, vec_col),
     )
     return parquet_checkpoint(enc, "sq8_enc")
+
+
+def _vec_dim(df: DataFrame, vec_col: str) -> int | None:
+    """Vector width read from the first row; None for an empty frame."""
+    row = df.select(F.size(vec_col).alias("d")).first()
+    return None if row is None else int(row["d"])
+
+
+def _with_sq8_codes(df: DataFrame, dim: int | None) -> DataFrame:
+    """The SQ8 step, shared by every SQ8 encode: append (sq_scale,
+    sq_codes, cnorm) to a frame carrying the quantized vector ``cv``.
+    scale = max|cv_i| / 127 (1.0 for a zero vector), codes_i =
+    round(cv_i / scale). The scale derives from the QUANTIZED cv (the
+    values the codes are built from) — deriving it from the raw vector
+    lets rounding push a coordinate above the raw max and a code outside
+    [-127, 127]. ``dim`` None marks an empty frame (an empty batch or
+    corpus): any scale expression types it, and it encodes to nothing."""
+    scale = F.lit(1.0)
+    if dim is not None:
+        mx = F.expr(
+            "greatest(" + ", ".join(f"abs(cv[{i}])" for i in range(dim)) + ")"
+        )
+        scale = F.when(mx > 0, mx / 127.0).otherwise(scale)
+    cols = df.columns
+    return df.select(*cols, scale.alias("sq_scale")).select(
+        *cols,
+        "sq_scale",
+        F.expr("transform(cv, x -> cast(round(x / sq_scale) as int))").alias(
+            "sq_codes"
+        ),
+        F.round(norm_expr(F.col("cv")), 9).alias("cnorm"),
+    )
+
+
+def _sq8_approx(enc: DataFrame, qid, v: list[float], qn: float, fn: str) -> DataFrame:
+    """(query_id, corpus_id, _approx) for one query vector ``v`` (norm
+    ``qn``) over the nonzero rows of an SQ8-coded frame: an UNROLLED
+    integer dot of the RAW sq_codes attribute against the query's own
+    int8 codes as literals (whole-stage-codegen'd flat arithmetic, never
+    an interpreted zip_with; the _dot_const_sql constraints), scaled by
+    the stored scales and norms into an approximate cosine."""
+    if qn == 0:
+        # mirror the cnorm>0 corpus-side guard: a zero query would make
+        # _approx divide by zero (NULL) and pick arbitrary candidates
+        raise ValueError(
+            f"{fn}: query {qid!r} has zero norm — cosine similarity is "
+            "undefined for a zero vector"
+        )
+    qmax = max((abs(x) for x in v), default=0.0)
+    qs = qmax / 127.0 if qmax > 0 else 1.0
+    qc = [int(round(x / qs)) for x in v]
+    int_dot = " + ".join(
+        f"cast(sq_codes[{i}] as bigint)*{c}L" for i, c in enumerate(qc) if c != 0
+    ) or "0L"
+    approx = (
+        f"(sq_scale * cast({qs!r} as double) * cast(({int_dot}) as double))"
+        f" / (cnorm * cast({qn!r} as double))"
+    )
+    return enc.filter(F.col("cnorm") > 0).select(
+        F.lit(qid).alias("query_id"), "corpus_id", F.expr(approx).alias("_approx")
+    )
 
 
 def topk_cosine_sq8(
@@ -1482,68 +1557,18 @@ def topk_cosine_sq8(
     per_query = []
     for r in qrows:
         v = [float(x) for x in r["_v"]]
-        qmax = max((abs(x) for x in v), default=0.0)
-        qs = qmax / 127.0 if qmax > 0 else 1.0
-        qc = [int(round(x / qs)) for x in v]
         qn = sum(
             (round(x, quantize) if quantize is not None else x) ** 2
             for x in v
         ) ** 0.5
-        if qn == 0:
-            # mirror the cnorm>0 corpus-side guard: a zero query would
-            # make _approx divide-by-zero (NULL), silently picking
-            # arbitrary candidates — fail loudly instead.
-            raise ValueError(
-                f"topk_cosine_sq8: query {r['_qid']!r} has zero norm — "
-                "cosine similarity is undefined for a zero vector"
-            )
-        int_dot = " + ".join(
-            f"cast(sq_codes[{i}] as bigint)*{c}L"
-            for i, c in enumerate(qc)
-            if c != 0
-        ) or "0L"
-        approx = (
-            f"(sq_scale * cast({qs!r} as double) * cast(({int_dot}) as double))"
-            f" / (cnorm * cast({qn!r} as double))"
-        )
-        per_query.append(
-            enc.select(
-                F.lit(r["_qid"]).alias("query_id"),
-                "corpus_id",
-                F.expr(approx).alias("_approx"),
-            ).filter(F.col("cnorm") > 0)
-        )
-    scored = per_query[0]
-    for p in per_query[1:]:
-        scored = scored.unionByName(p)
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("_approx"), F.asc("corpus_id")
-    )
-    cands = (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select("query_id", "corpus_id")
-    )
-    # exact rerank: candidates join back their raw (quantized) vectors
-    # — column-pruned second read of the encoded table
+        per_query.append(_sq8_approx(enc, r["_qid"], v, qn, "topk_cosine_sq8"))
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         quantized_vec(vec_col, quantize).alias("qv"),
     )
-    rer = (
-        cands.join(enc.select("corpus_id", "cv"), "corpus_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "score", F.round(cosine_expr(F.col("cv"), F.col("qv")), 6)
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("corpus_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
+    return _exact_rerank(
+        reduce(DataFrame.unionByName, per_query), "_approx", enc, q, k,
+        rerank_factor,
     )
 
 
@@ -1604,55 +1629,31 @@ def write_ivfsq8_index(
     Returns the centroid list (also persisted). A pre-trained coarse
     model may be passed via ``centroids`` (the append_*_batch rebuild
     posture)."""
-    from etl_hero_spark.checkpoint import parquet_checkpoint
-    from etl_hero_spark.skew import ensure_min_partitions
-
     cents = centroids if centroids is not None else train_centroids(
         corpus, n_centroids=n_centroids, vec_col=vec_col
     )
     spark = corpus.sparkSession
-    spark.createDataFrame(
-        [
-            (i, [float(v) for v in c], -1 if quantize is None else quantize)
-            for i, c in enumerate(cents)
-        ],
-        "list_id int, centroid array<double>, quantize int",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    staged = parquet_checkpoint(
-        ensure_min_partitions(corpus).select(
-            F.col(id_col).alias("corpus_id"),
-            nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias(
-                "list_id"
-            ),
-            quantized_vec(vec_col, quantize).alias("cv"),
-        ),
-        "ivfsq8_staged",
-    )
-    dim = int(staged.select(F.size("cv").alias("d")).first()["d"])
-    mx = F.expr(
-        "greatest(" + ", ".join(f"abs(cv[{i}])" for i in range(dim)) + ")"
-    )
-    scale = F.when(mx > 0, mx / 127.0).otherwise(F.lit(1.0))
-    enc = staged.select(
-        "corpus_id",
-        "list_id",
-        "cv",
-        scale.alias("sq_scale"),
-    ).select(
-        "corpus_id",
-        "list_id",
-        "cv",
-        "sq_scale",
-        F.expr(
-            "transform(cv, x -> cast(round(x / sq_scale) as int))"
-        ).alias("sq_codes"),
-        F.round(norm_expr(F.col("cv")), 9).alias("cnorm"),
-    )
-    enc.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/codes"
-    )
+    _write_index_model(spark, path, quantize, centroids=cents)
+    _ivfsq8_encode(corpus, cents, quantize, id_col, vec_col).write.mode(
+        "overwrite"
+    ).partitionBy("list_id").parquet(f"{path}/codes")
     write_index_meta(spark, path, "ivfsq8", quantize)
     return cents
+
+
+def _ivfsq8_encode(
+    df: DataFrame, cents: list, quantize: int | None, id_col: str, vec_col: str
+) -> DataFrame:
+    """The IVF-SQ8 encode, shared by write_ivfsq8_index and
+    append_ivfsq8_batch: the IVF assignment (corpus_id, list_id, cv) is
+    staged to disk, then the SQ8 step reads the MATERIALIZED cv, so the
+    quantized vector is never re-inlined per extraction."""
+    from etl_hero_spark.checkpoint import parquet_checkpoint
+
+    staged = parquet_checkpoint(
+        _ivf_encode(df, cents, quantize, id_col, vec_col), "ivfsq8_staged"
+    )
+    return _with_sq8_codes(staged, _vec_dim(staged, "cv"))
 
 
 def topk_cosine_ivfsq8_indexed(
@@ -1681,13 +1682,8 @@ def topk_cosine_ivfsq8_indexed(
     every unrolled rung here)."""
     import numpy as np
 
-    cent_rows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(),
-        key=lambda r: r["list_id"],
-    )
-    cents = np.asarray([list(r["centroid"]) for r in cent_rows])
-    quantize = cent_rows[0]["quantize"]
-    quantize = None if quantize < 0 else quantize
+    cents, _books, quantize, _meta = read_index_model(spark, path)
+    cents = np.asarray(cents)
     nprobe = min(nprobe, len(cents))
     qrows = queries.select(
         F.col(query_id_col).alias("_qid"),
@@ -1701,72 +1697,24 @@ def topk_cosine_ivfsq8_indexed(
     for r in qrows:
         v = np.asarray([float(x) for x in r["_qv"]], dtype=np.float64)
         qn = float(np.sqrt((v * v).sum()))
-        if qn == 0:
-            raise ValueError(
-                f"topk_cosine_ivfsq8: query {r['_qid']!r} has zero "
-                "norm — cosine similarity is undefined for a zero "
-                "vector"
-            )
         # nearest lists by |c|^2 - 2 v.c (same ordering as the build)
         d2 = (cents * cents).sum(axis=1) - 2.0 * (cents @ v)
         lists = [int(i) for i in np.argsort(d2, kind="stable")[:nprobe]]
         probed_union.update(lists)
-        qmax = float(np.abs(v).max())
-        qs = qmax / 127.0 if qmax > 0 else 1.0
-        qc = [int(round(x / qs)) for x in v]
-        int_dot = " + ".join(
-            f"cast(sq_codes[{i}] as bigint)*{c}L"
-            for i, c in enumerate(qc)
-            if c != 0
-        ) or "0L"
-        approx = (
-            f"(sq_scale * cast({qs!r} as double) * "
-            f"cast(({int_dot}) as double))"
-            f" / (cnorm * cast({qn!r} as double))"
-        )
         per_query.append(
-            codes_all.filter(F.col("list_id").isin(lists))
-            .filter(F.col("cnorm") > 0)
-            .select(
-                F.lit(r["_qid"]).alias("query_id"),
-                "corpus_id",
-                F.expr(approx).alias("_approx"),
+            _sq8_approx(
+                codes_all.filter(F.col("list_id").isin(lists)),
+                r["_qid"], v.tolist(), qn, "topk_cosine_ivfsq8",
             )
         )
-    scored = per_query[0]
-    for p in per_query[1:]:
-        scored = scored.unionByName(p)
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("_approx"), F.asc("corpus_id")
-    )
-    cands = (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select("query_id", "corpus_id")
-    )
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         quantized_vec(vec_col, quantize).alias("qv"),
     )
-    rer = (
-        cands.join(
-            codes_all.filter(
-                F.col("list_id").isin(sorted(probed_union))
-            ).select("corpus_id", "cv"),
-            "corpus_id",
-        )
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "score", F.round(cosine_expr(F.col("cv"), F.col("qv")), 6)
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("corpus_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
+    vecs = codes_all.filter(F.col("list_id").isin(sorted(probed_union)))
+    return _exact_rerank(
+        reduce(DataFrame.unionByName, per_query), "_approx", vecs, q, k,
+        rerank_factor,
     )
 
 
@@ -1800,28 +1748,45 @@ def write_ivfpq_residual_index(
     plus the per-row residual origin is implicit in list_id.
 
     Returns (centroids, codebooks)."""
-    import numpy as np
-
-    from etl_hero_spark.checkpoint import parquet_checkpoint
-    from etl_hero_spark.skew import ensure_min_partitions
-
     cents = centroids if centroids is not None else train_centroids(
         corpus, n_centroids=n_centroids, vec_col=vec_col
     )
     spark = corpus.sparkSession
+    enc, books = _ivfpq_residual_encode(
+        corpus, cents, codebooks, quantize, id_col, vec_col, m, k_sub
+    )
+    _write_index_model(spark, path, quantize, centroids=cents, codebooks=books)
+    enc.write.mode("overwrite").partitionBy("list_id").parquet(f"{path}/codes")
+    write_index_meta(spark, path, "ivfpq_residual", quantize)
+    return cents, books
+
+
+def _ivfpq_residual_encode(
+    df: DataFrame,
+    cents: list,
+    books: list | None,
+    quantize: int | None,
+    id_col: str,
+    vec_col: str,
+    m: int = 8,
+    k_sub: int = 16,
+) -> tuple:
+    """The residual IVF-PQ encode, shared by write_ivfpq_residual_index
+    and append_ivfpq_residual_batch: pass 1 stages (corpus_id, list_id,
+    cv, rv = cv - centroid[list]) to disk; pass 2 PQ-encodes rv, by then
+    a materialized scan attribute. ``books`` None trains the codebooks
+    on a bounded rv sample (the build). Returns (codes frame, books)."""
+    import numpy as np
+
+    from etl_hero_spark.checkpoint import parquet_checkpoint
+
     cents_sql = "array(" + ", ".join(
         "array(" + ", ".join(f"cast({float(x)!r} as double)" for x in c)
         + ")"
         for c in cents
     ) + ")"
     staged = parquet_checkpoint(
-        ensure_min_partitions(corpus).select(
-            F.col(id_col).alias("corpus_id"),
-            nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias(
-                "list_id"
-            ),
-            quantized_vec(vec_col, quantize).alias("cv"),
-        ).select(
+        _ivf_encode(df, cents, quantize, id_col, vec_col).select(
             "corpus_id",
             "list_id",
             "cv",
@@ -1834,9 +1799,7 @@ def write_ivfpq_residual_index(
         ),
         "ivfpq_res_staged",
     )
-    if codebooks is not None:
-        books = codebooks
-    else:
+    if books is None:
         rv_rows = staged.select("rv").limit(4096).collect()
         books = _train_books_np(
             np.asarray([r["rv"] for r in rv_rows], dtype=np.float64),
@@ -1845,34 +1808,14 @@ def write_ivfpq_residual_index(
             iters=10,
             seed=42,
         )
-    spark.createDataFrame(
-        [
-            (i, [float(v) for v in c], -1 if quantize is None else quantize)
-            for i, c in enumerate(cents)
-        ],
-        "list_id int, centroid array<double>, quantize int",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [
-            (j, c, [float(v) for v in cent])
-            for j, book in enumerate(books)
-            for c, cent in enumerate(book)
-        ],
-        "subspace int, code int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
     enc = staged.select(
         "corpus_id",
         "list_id",
-        # rv is a materialized attribute here: no re-inline per extraction
         pq_codes_expr("rv", books, dp=None).alias("codes"),
         F.round(norm_expr(F.col("cv")), 9).alias("cnorm"),
         "cv",
     )
-    enc.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/codes"
-    )
-    write_index_meta(spark, path, "ivfpq_residual", quantize)
-    return cents, books
+    return enc, books
 
 
 def topk_cosine_ivfpq_residual_indexed(
@@ -1893,94 +1836,9 @@ def topk_cosine_ivfpq_residual_indexed(
     IVF-PQ. Static partition pruning, exact rerank, and
     full-probe + full-rerank == brute force exactly, same as the plain
     form (pinned in tests/test_simsearch.py)."""
-    import numpy as np
-
-    cent_rows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(),
-        key=lambda r: r["list_id"],
-    )
-    cents = np.asarray([list(r["centroid"]) for r in cent_rows])
-    quantize = cent_rows[0]["quantize"]
-    quantize = None if quantize < 0 else quantize
-    book_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    mm = 1 + max(r["subspace"] for r in book_rows)
-    books: list[list[list[float]]] = [[] for _ in range(mm)]
-    for r in sorted(book_rows, key=lambda r: (r["subspace"], r["code"])):
-        books[r["subspace"]].append(list(r["centroid"]))
-    nprobe = min(nprobe, len(cents))
-    q_rows = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        quantized_vec(vec_col, quantize).alias("qv"),
-    ).collect()
-    if not q_rows:
-        raise ValueError("queries is empty")
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
-    sub = len(books[0][0])
-    probe_data, qv_data = [], []
-    for r in q_rows:
-        v = np.asarray(r["qv"], dtype=np.float64)
-        scores = (cents * cents).sum(axis=1) - 2.0 * (cents @ v)
-        lists = [int(i) for i in np.argsort(scores, kind="stable")[:nprobe]]
-        tabs = [
-            [
-                float(np.dot(v[j * sub : (j + 1) * sub], np.asarray(c)))
-                for c in books[j]
-            ]
-            for j in range(mm)
-        ]
-        for li in lists:
-            probe_data.append(
-                (r["query_id"], li, tabs, float(cents[li] @ v))
-            )
-        qv_data.append((r["query_id"], [float(x) for x in r["qv"]]))
-    probes = spark.createDataFrame(
-        probe_data,
-        f"query_id {qid_type}, list_id int, tabs array<array<double>>, "
-        "qdotc double",
-    )
-    q = spark.createDataFrame(
-        qv_data, f"query_id {qid_type}, qv array<double>"
-    )
-    probed_lists = sorted({p[1] for p in probe_data})
-    codes = spark.read.parquet(f"{path}/codes").filter(
-        F.col("list_id").isin(probed_lists)
-    )
-    scored = (
-        codes.drop("cv")
-        .join(F.broadcast(probes), "list_id")
-        .withColumn(
-            "adc",
-            F.round(
-                (
-                    F.col("qdotc")
-                    + pq_adc_score_expr("codes", "tabs", mm)
-                )
-                / F.col("cnorm"),
-                6,
-            ),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("corpus_id"))
-    cand = (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select("query_id", "corpus_id")
-    )
-    rer = (
-        codes.select("corpus_id", "cv")
-        .join(F.broadcast(cand), "corpus_id")
-        .join(F.broadcast(q.select("query_id", "qv")), "query_id")
-        .withColumn(
-            "score", F.round(cosine_expr(F.col("cv"), F.col("qv")), 6)
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("corpus_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "score", "rank")
+    return _ivfpq_probe(
+        spark, queries, path, k, nprobe, rerank_factor, query_id_col,
+        vec_col, adc_dp=None, residual=True,
     )
 
 
@@ -2071,7 +1929,8 @@ def read_index_model(spark, path: str, with_books: bool = False):
     (centroids, codebooks_or_None, quantize, meta_or_None). The model
     is the index's IDENTITY — appended batches must encode under
     exactly these values or probe scores stop being comparable across
-    batches. A steady-state append loop should call this once and
+    batches — and every *_indexed search probes with it. A steady-state
+    append loop should call this once and
     thread the tuple through append_*_batch(model=...) instead of
     re-collecting the centroids per batch (VERDICT r8 #6)."""
     cent_rows = sorted(
@@ -2139,16 +1998,9 @@ def append_ivf_batch(
             F.col("corpus_id").alias(id_col)
         )
         batch = batch.join(existing, id_col, "left_anti")
-    assignments = ensure_min_partitions(batch).select(
-        F.col(id_col).alias("corpus_id"),
-        quantized_vec(vec_col, quantize).alias("cv"),
-        nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias(
-            "list_id"
-        ),
-    )
-    assignments.write.mode("append").partitionBy("list_id").parquet(
-        f"{path}/lists"
-    )
+    _ivf_encode(batch, cents, quantize, id_col, vec_col).write.mode(
+        "append"
+    ).partitionBy("list_id").parquet(f"{path}/lists")
 
 
 def append_sq8_batch(
@@ -2198,46 +2050,14 @@ def append_ivfsq8_batch(
     exactly as the builder does (same two-select disk boundary), and
     append into the list_id-partitioned codes table. ``model`` takes
     a pre-read read_index_model tuple (VERDICT r8 #6)."""
-    from etl_hero_spark.checkpoint import parquet_checkpoint
-
     spark = batch.sparkSession
     cents, _books, quantize, meta = (
         model if model is not None else read_index_model(spark, path)
     )
     _check_index_kind(meta, "ivfsq8", "append_ivfsq8_batch")
-    staged = parquet_checkpoint(
-        ensure_min_partitions(batch).select(
-            F.col(id_col).alias("corpus_id"),
-            nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias(
-                "list_id"
-            ),
-            quantized_vec(vec_col, quantize).alias("cv"),
-        ),
-        "ivfsq8_append",
-    )
-    dim_row = staged.select(F.size("cv").alias("d")).first()
-    if dim_row is None:
-        return  # empty batch: nothing to append (no-op contract)
-    dim = int(dim_row["d"])
-    mx = F.expr(
-        "greatest(" + ", ".join(f"abs(cv[{i}])" for i in range(dim)) + ")"
-    )
-    scale = F.when(mx > 0, mx / 127.0).otherwise(F.lit(1.0))
-    enc = staged.select(
-        "corpus_id", "list_id", "cv", scale.alias("sq_scale")
-    ).select(
-        "corpus_id",
-        "list_id",
-        "cv",
-        "sq_scale",
-        F.expr(
-            "transform(cv, x -> cast(round(x / sq_scale) as int))"
-        ).alias("sq_codes"),
-        F.round(norm_expr(F.col("cv")), 9).alias("cnorm"),
-    )
-    enc.write.mode("append").partitionBy("list_id").parquet(
-        f"{path}/codes"
-    )
+    _ivfsq8_encode(batch, cents, quantize, id_col, vec_col).write.mode(
+        "append"
+    ).partitionBy("list_id").parquet(f"{path}/codes")
 
 
 def append_ivfpq_batch(
@@ -2272,20 +2092,9 @@ def append_ivfpq_batch(
             f"{adc_dp!r}; appended codes would be incomparable with "
             "the existing ADC tables"
         )
-    enc = ensure_min_partitions(batch).select(
-        F.col(id_col).alias("corpus_id"),
-        nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias(
-            "list_id"
-        ),
-        pq_codes_expr(vec_col, books, dp=adc_dp).alias("codes"),
-        F.round(norm_expr(quantized_vec(vec_col, quantize)), 9).alias(
-            "cnorm"
-        ),
-        quantized_vec(vec_col, quantize).alias("cv"),
-    )
-    enc.write.mode("append").partitionBy("list_id").parquet(
-        f"{path}/codes"
-    )
+    _ivfpq_encode(
+        batch, cents, books, quantize, adc_dp, id_col, vec_col
+    ).write.mode("append").partitionBy("list_id").parquet(f"{path}/codes")
 
 
 def append_ivfpq_residual_batch(
@@ -2302,8 +2111,6 @@ def append_ivfpq_residual_batch(
     batch too), PQ-encode the residual with the stored codebooks,
     append. ``model`` takes a pre-read read_index_model tuple
     (VERDICT r8 #6)."""
-    from etl_hero_spark.checkpoint import parquet_checkpoint
-
     spark = batch.sparkSession
     cents, books, quantize, meta = (
         model
@@ -2311,36 +2118,7 @@ def append_ivfpq_residual_batch(
         else read_index_model(spark, path, with_books=True)
     )
     _check_index_kind(meta, "ivfpq_residual", "append_ivfpq_residual_batch")
-    cents_sql = "array(" + ", ".join(
-        "array(" + ", ".join(f"cast({float(x)!r} as double)" for x in c)
-        + ")"
-        for c in cents
-    ) + ")"
-    staged = parquet_checkpoint(
-        ensure_min_partitions(batch).select(
-            F.col(id_col).alias("corpus_id"),
-            nearest_lists_expr(vec_col, cents, 1, dp=quantize)[0].alias(
-                "list_id"
-            ),
-            quantized_vec(vec_col, quantize).alias("cv"),
-        ).select(
-            "corpus_id",
-            "list_id",
-            "cv",
-            F.expr(
-                f"zip_with(cv, element_at({cents_sql}, list_id + 1), "
-                "(a, b) -> a - b)"
-            ).alias("rv"),
-        ),
-        "ivfpq_res_append",
+    enc, _ = _ivfpq_residual_encode(
+        batch, cents, books, quantize, id_col, vec_col
     )
-    enc = staged.select(
-        "corpus_id",
-        "list_id",
-        pq_codes_expr("rv", books, dp=None).alias("codes"),
-        F.round(norm_expr(F.col("cv")), 9).alias("cnorm"),
-        "cv",
-    )
-    enc.write.mode("append").partitionBy("list_id").parquet(
-        f"{path}/codes"
-    )
+    enc.write.mode("append").partitionBy("list_id").parquet(f"{path}/codes")

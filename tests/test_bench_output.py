@@ -323,10 +323,13 @@ def test_final_line_with_queries_fits_tail_window():
 
 
 def test_queries_for_line_real_snapshot_coverage():
-    """On the committed r10 per-query map the subset must cover every
-    query above ~1.5s — the band where regressions carry plan signal."""
+    """On the committed sf0.1 snapshot the subset must cover every
+    query above ~1.5s — the band where regressions carry plan signal.
+    The snapshot is BENCH_PREV.json, which bench.py only reads: a local
+    headline run rewrites BENCH_DETAIL.json, so that file cannot pin
+    anything."""
     with open(
-        os.path.join(os.path.dirname(bench.__file__), "BENCH_DETAIL.json")
+        os.path.join(os.path.dirname(bench.__file__), "BENCH_PREV.json")
     ) as f:
         times = json.load(f)["queries"]
     base = {

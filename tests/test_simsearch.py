@@ -1407,10 +1407,36 @@ def test_append_empty_batch_is_a_noop(spark, emb, queries, tmp_path):
     )
 
     ivfsq8 = str(tmp_path / "ivfsq8_empty")
-    write_ivfsq8_index(emb, ivfsq8, n_centroids=4)
+    cents = write_ivfsq8_index(emb, ivfsq8, n_centroids=4)
     m0 = spark.read.parquet(f"{ivfsq8}/codes").count()
     append_ivfsq8_batch(emb.filter(F.col("vec_id") < 0), ivfsq8)
     assert spark.read.parquet(f"{ivfsq8}/codes").count() == m0
+    # an EMPTY CORPUS under a given model writes for every layout (the
+    # shared encoders take the empty-frame path the appends take), and
+    # the IVF-SQ8 index it leaves grows by append into the full build
+    none = emb.filter(F.col("vec_id") < 0)
+    books = simsearch.train_pq_codebooks(emb, m=4, k_sub=4)
+    simsearch.write_ivf_index(none, str(tmp_path / "e_ivf"), centroids=cents)
+    simsearch.write_ivfpq_index(
+        none, str(tmp_path / "e_ivfpq"), centroids=cents, codebooks=books
+    )
+    simsearch.write_ivfpq_residual_index(
+        none, str(tmp_path / "e_res"), centroids=cents, codebooks=books
+    )
+    grown = str(tmp_path / "e_ivfsq8")
+    write_ivfsq8_index(none, grown, centroids=cents)
+    append_ivfsq8_batch(emb, grown)
+
+    def probe(p):
+        return {
+            tuple(r)
+            for r in simsearch.topk_cosine_ivfsq8_indexed(
+                spark, queries, p, k=5, nprobe=2
+            ).collect()
+        }
+
+    want = probe(ivfsq8)
+    assert probe(grown) == want and want
 
 
 def test_read_index_meta_corrupt_sidecar_raises(spark, emb, tmp_path):
@@ -1437,3 +1463,82 @@ def test_read_index_meta_corrupt_sidecar_raises(spark, emb, tmp_path):
         read_index_meta(spark, path)
     # missing path still reads as None (back-compat contract intact)
     assert read_index_meta(spark, str(tmp_path / "absent")) is None
+
+
+def test_persisted_layouts_are_pinned(spark, tmp_path):
+    """The on-disk layout of every persisted index kind: each sub-table's
+    parquet columns and types, the list_id partitioning of the probed
+    tables, the flat SQ8 directory with its sibling sidecar, and the
+    meta row. Indexes written by one version must stay readable and
+    appendable by the next."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    corpus = spark.createDataFrame(
+        [(i, [((i * 7 + j * 3) % 11 - 5) / 4.0 for j in range(4)]) for i in range(16)],
+        "vec_id bigint, embedding array<double>",
+    )
+    d = str(tmp_path)
+    simsearch.write_ivf_index(corpus, f"{d}/ivf", n_centroids=2)
+    simsearch.write_sq8_index(corpus, f"{d}/sq8")
+    simsearch.write_ivfsq8_index(corpus, f"{d}/ivfsq8", n_centroids=2)
+    simsearch.write_ivfpq_index(
+        corpus, f"{d}/ivfpq", n_centroids=2, m=2, k_sub=2, adc_dp=4
+    )
+    simsearch.write_ivfpq_residual_index(
+        corpus, f"{d}/res", n_centroids=2, m=2, k_sub=2
+    )
+    simsearch.write_pq_index(corpus, f"{d}/pq", m=2, k_sub=2)
+
+    def columns(table, partitioned=False):
+        entries = [e for e in os.listdir(table) if not e.startswith((".", "_"))]
+        if partitioned:
+            assert entries and all(e.startswith("list_id=") for e in entries)
+            assert sorted(int(e.split("=")[1]) for e in entries) == [0, 1]
+            table = os.path.join(table, entries[0])
+            entries = [e for e in os.listdir(table) if not e.startswith((".", "_"))]
+        assert entries and all(e.endswith(".parquet") for e in entries)
+        schema = pq.read_schema(os.path.join(table, entries[0]))
+        return {f.name: str(f.type) for f in schema}
+
+    def meta(table):
+        return pq.read_table(table).to_pylist()
+
+    vec = "list<element: double>"
+    codes = "list<element: int32>"
+    cents = {"list_id": "int32", "centroid": vec, "quantize": "int32"}
+    books = {"subspace": "int32", "code": "int32", "centroid": vec}
+    sq8 = {
+        "corpus_id": "int64",
+        "cv": vec,
+        "sq_scale": "double",
+        "sq_codes": codes,
+        "cnorm": "double",
+    }
+    pq_codes = {"corpus_id": "int64", "codes": codes, "cnorm": "double", "cv": vec}
+
+    assert columns(f"{d}/ivf/centroids") == cents
+    assert columns(f"{d}/ivf/lists", True) == {"corpus_id": "int64", "cv": vec}
+    assert meta(f"{d}/ivf/meta") == [{"kind": "ivf", "quantize": 3, "adc_dp": -1}]
+
+    assert columns(f"{d}/sq8") == sq8
+    assert meta(f"{d}/sq8_meta") == [{"kind": "sq8", "quantize": 3, "adc_dp": -1}]
+
+    assert columns(f"{d}/ivfsq8/centroids") == cents
+    assert columns(f"{d}/ivfsq8/codes", True) == sq8
+    assert meta(f"{d}/ivfsq8/meta") == [
+        {"kind": "ivfsq8", "quantize": 3, "adc_dp": -1}
+    ]
+
+    for kind, path, adc_dp in (("ivfpq", "ivfpq", 4), ("ivfpq_residual", "res", -1)):
+        assert columns(f"{d}/{path}/centroids") == cents
+        assert columns(f"{d}/{path}/codebooks") == books
+        assert columns(f"{d}/{path}/codes", True) == pq_codes
+        assert meta(f"{d}/{path}/meta") == [
+            {"kind": kind, "quantize": 3, "adc_dp": adc_dp}
+        ]
+
+    assert columns(f"{d}/pq/codebooks") == {**books, "quantize": "int32"}
+    assert columns(f"{d}/pq/codes") == pq_codes
+    assert sorted(os.listdir(f"{d}/pq")) == ["codebooks", "codes"]
