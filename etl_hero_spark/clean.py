@@ -17,6 +17,8 @@ from etl_hero_spark.detect import (
     DEFAULT_ZSCORE_THRESHOLD,
     parse_date_expr,
     with_outlier_flags,
+    zscore_flag,
+    zscore_stats,
 )
 from etl_hero_spark.profile import mode_value, quantiles
 
@@ -41,10 +43,21 @@ def replace_outliers(
 ) -> DataFrame:
     """R1b/R1c (app.py:255-266): replace outlier values with the median /
     mean of the NON-outlier rows (the reference computes the statistic
-    after masking — a subtle but load-bearing detail)."""
-    flagged = with_outlier_flags(df, [col], threshold)
-    flag = F.col(f"is_outlier_{col}")
-    keep = flagged.filter(~flag)
+    after masking — a subtle but load-bearing detail).
+
+    mu and sigma are read in one tiny job and enter the plan as literals,
+    with the flag semantics of ``with_outlier_flags`` (its lazy form,
+    which broadcast-joins the stats row instead): the result is one
+    projection with no join, so later scans of it do not re-run the
+    stats aggregate."""
+    row = zscore_stats(df, [col]).first()
+    flag = zscore_flag(
+        col,
+        F.lit(row[f"mu_{col}"]).cast("double"),
+        F.lit(row[f"sigma_{col}"]).cast("double"),
+        threshold,
+    )
+    keep = df.filter(~flag)
     if strategy == "median":
         stat = keep.agg(F.percentile(col, 0.5).alias("v")).first()["v"]
     elif strategy == "mean":
@@ -53,9 +66,7 @@ def replace_outliers(
         stat = keep.agg(dec_avg(col, "v")).first()["v"]
     else:  # pragma: no cover - guarded by API
         raise ValueError(f"unknown strategy {strategy!r}")
-    return flagged.withColumn(
-        col, F.when(flag, F.lit(stat)).otherwise(F.col(col))
-    ).drop(f"is_outlier_{col}")
+    return df.withColumn(col, F.when(flag, F.lit(stat)).otherwise(F.col(col)))
 
 
 def clip_outliers(

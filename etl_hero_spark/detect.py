@@ -38,6 +38,15 @@ def zscore_stats(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.agg(*exprs)
 
 
+def zscore_flag(c: str, mu: Column, sigma: Column, threshold: float) -> Column:
+    """|c - mu| / sigma > threshold, never NULL: sigma NULL or 0 and a
+    NULL value both read False."""
+    flag = F.when(sigma.isNull() | (sigma == 0), F.lit(False)).otherwise(
+        F.abs((F.col(c) - mu) / sigma) > threshold
+    )
+    return F.coalesce(flag, F.lit(False))
+
+
 def with_outlier_flags(
     df: DataFrame,
     cols: list[str] | None = None,
@@ -54,13 +63,9 @@ def with_outlier_flags(
     stats = zscore_stats(df, cols)
     out = df.crossJoin(F.broadcast(stats))
     for c in cols:
-        mu, sigma = F.col(f"mu_{c}"), F.col(f"sigma_{c}")
-        flag = (
-            F.when(sigma.isNull() | (sigma == 0), F.lit(False))
-            .otherwise(F.abs((F.col(c) - mu) / sigma) > threshold)
-        )
         out = out.withColumn(
-            f"is_outlier_{c}", F.coalesce(flag, F.lit(False))
+            f"is_outlier_{c}",
+            zscore_flag(c, F.col(f"mu_{c}"), F.col(f"sigma_{c}"), threshold),
         )
     drop = [f"mu_{c}" for c in cols] + [f"sigma_{c}" for c in cols]
     return out.drop(*drop)

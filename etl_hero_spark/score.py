@@ -57,14 +57,12 @@ def quality_score_df(before: DataFrame, after: DataFrame) -> DataFrame:
 
 def insights(df_before: DataFrame, df_after: DataFrame) -> dict:
     """M2 (app.py:372-376): rows before/after, columns, nulls remaining."""
-    nb_rows = df_before.count()
-    na_rows = df_after.count()
-    nulls_after = null_counts(df_after).first()["n_null_total"]
+    after = null_counts(df_after).first()
     return {
-        "rows_before": nb_rows,
-        "rows_after": na_rows,
+        "rows_before": df_before.count(),
+        "rows_after": after["n_rows"],
         "columns": df_after.columns,
-        "nulls_after": int(nulls_after),
+        "nulls_after": int(after["n_null_total"]),
     }
 
 

@@ -1068,9 +1068,9 @@ def _ivfpq_probe(
     adc_dp: int | None,
     residual: bool,
 ) -> DataFrame:
-    """The IVF-PQ search behind both public forms. The residual form
-    adds each (query, list) coarse dot q.centroid[list] as a ``qdotc``
-    probe column to the ADC sum, and rejects an empty query set."""
+    """The IVF-PQ search behind both public forms. Both reject an empty
+    query set; the residual form adds each (query, list) coarse dot
+    q.centroid[list] as a ``qdotc`` probe column to the ADC sum."""
     import numpy as np
 
     cents, books, quantize, _meta = read_index_model(
@@ -1082,7 +1082,7 @@ def _ivfpq_probe(
         F.col(query_id_col).alias("query_id"),
         quantized_vec(vec_col, quantize).alias("qv"),
     ).collect()
-    if residual and not q_rows:
+    if not q_rows:
         raise ValueError("queries is empty")
     # the driver-rebuilt probe/query frames must carry the CALLER's id
     # type — the index accepts any id type at build, so hardcoding long

@@ -2,8 +2,10 @@
 median-of-non-outliers, mode tie-break, clip null passthrough."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from etl_hero_spark import clean, detect
+from etl_hero_spark.profile import dec_avg
 
 
 def _outlier_df(spark):
@@ -24,6 +26,61 @@ def test_replace_outliers_median_of_non_outliers(spark):
     replaced = out.filter(F.col("id") == 100).first()["x"]
     # median of the 100 non-outlier rows (50..54 pattern), NOT of full column
     assert 50.0 <= replaced <= 54.0
+
+
+def _replace_outliers_broadcast_form(df, col, strategy):
+    """replace_outliers over the with_outlier_flags formulation, written
+    out: the stats row is broadcast-joined into the plan and the flag
+    reads its columns. The reference for the literal form."""
+    stats = detect.zscore_stats(df, [col])
+    mu, sigma = F.col(f"mu_{col}"), F.col(f"sigma_{col}")
+    is_out = F.when(sigma.isNull() | (sigma == 0), F.lit(False)).otherwise(
+        F.abs((F.col(col) - mu) / sigma) > detect.DEFAULT_ZSCORE_THRESHOLD
+    )
+    flagged = df.crossJoin(F.broadcast(stats)).withColumn(
+        f"is_outlier_{col}", F.coalesce(is_out, F.lit(False))
+    ).drop(f"mu_{col}", f"sigma_{col}")
+    flag = F.col(f"is_outlier_{col}")
+    keep = flagged.filter(~flag)
+    if strategy == "median":
+        stat = keep.agg(F.percentile(col, 0.5).alias("v")).first()["v"]
+    else:
+        stat = keep.agg(dec_avg(col, "v")).first()["v"]
+    return flagged.withColumn(
+        col, F.when(flag, F.lit(stat)).otherwise(F.col(col))
+    ).drop(f"is_outlier_{col}")
+
+
+def _by_id(df):
+    return sorted(df.collect(), key=lambda r: r["id"])
+
+
+_PLANTED = [(i, 50.0 + (i % 5)) for i in range(100)] + [(100, 5000.0)]
+_OUTLIER_CASES = {
+    "planted": (_PLANTED, "id long, x double"),
+    "constant": ([(i, 7.25) for i in range(30)], "id long, x double"),
+    "all_null": ([(i, None) for i in range(10)], "id long, x double"),
+    "mixed_null": (
+        _PLANTED + [(i, None) for i in range(101, 120)], "id long, x double"
+    ),
+    "integer": (
+        [(i, 10 + (i % 3)) for i in range(100)] + [(100, -9000)],
+        "id long, x int",
+    ),
+}
+
+
+@pytest.mark.parametrize("strategy", ["median", "mean"])
+@pytest.mark.parametrize("case", sorted(_OUTLIER_CASES))
+def test_replace_outliers_matches_broadcast_form(spark, case, strategy):
+    rows, schema = _OUTLIER_CASES[case]
+    df = spark.createDataFrame(rows, schema)
+    got = clean.replace_outliers(df, "x", strategy)
+    want = _replace_outliers_broadcast_form(df, "x", strategy)
+    assert got.schema == want.schema
+    assert _by_id(got) == _by_id(want)
+    if case in ("planted", "mixed_null", "integer"):
+        assert _by_id(got) != _by_id(df)  # the planted outlier was replaced
 
 
 def test_clip_outliers_preserves_null(spark):

@@ -84,6 +84,79 @@ def test_pipeline_replay_undo_log(spark):
     assert p.log == [] and p.current is base
 
 
+def _add_step(k):
+    """A step that adds k to column v (the raw transform, uncounted)."""
+    return lambda df: df.withColumn("v", F.col("v") + k)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_pipeline_builds_each_step_once(spark):
+    """Each step's function runs once however often current is read:
+    a click applies only its own step to the memoized frame before it."""
+    from collections import Counter
+
+    from etl_hero_spark.pipeline import Pipeline, Step
+
+    calls = Counter()
+
+    def counted(name, k):
+        def fn(df):
+            calls[name] += 1
+            return _add_step(k)(df)
+
+        return fn
+
+    base = spark.range(6).withColumn("v", F.col("id") * 10)
+    p = Pipeline(base)
+    ks = [1, 2, 4, 8]
+    for j, k in enumerate(ks, start=1):
+        p.apply(f"s{k}", counted(f"s{k}", k))
+        assert calls[f"s{k}"] == 0  # apply stays lazy
+        p.current
+        assert calls == Counter({f"s{x}": 1 for x in ks[:j]})
+    # replay(j) equals a fresh composition of the first j steps, from memo
+    for j in range(len(ks) + 1):
+        fresh = base
+        for k in ks[:j]:
+            fresh = _add_step(k)(fresh)
+        assert _rows(p.replay(j)) == _rows(fresh)
+    assert p.replay(0) is base and p.replay(2) is p.replay(2)
+    assert calls == Counter({f"s{x}": 1 for x in ks})
+
+    # undo by pop: the next current is the memoized frame before it
+    undo = p.replay(3)
+    p.steps.pop()
+    assert p.current is undo
+    p.apply("s16", counted("s16", 16))
+    assert _rows(p.current) == _rows(base.withColumn("v", F.col("v") + 23))
+    assert calls == Counter({"s1": 1, "s2": 1, "s4": 1, "s8": 1, "s16": 1})
+
+    # replacing a step rebuilds from that step on, not before it
+    p.steps[1] = Step("s32", counted("s32", 32))
+    assert _rows(p.current) == _rows(base.withColumn("v", F.col("v") + 53))
+    assert calls == Counter(
+        {"s1": 1, "s2": 1, "s4": 2, "s8": 1, "s16": 2, "s32": 1}
+    )
+
+    # a new original rebuilds every step over it
+    p.original = base.withColumn("v", F.col("v") + 100)
+    assert _rows(p.current) == _rows(base.withColumn("v", F.col("v") + 153))
+    assert calls == Counter(
+        {"s1": 2, "s2": 1, "s4": 3, "s8": 1, "s16": 3, "s32": 2}
+    )
+    p.original = base
+
+    # reset clears the memo: the same step function runs again
+    p.reset()
+    assert p.current is base
+    p.apply("s1", counted("s1", 1))
+    assert _rows(p.current) == _rows(base.withColumn("v", F.col("v") + 1))
+    assert calls["s1"] == 3
+
+
 def test_excel_ingest_gated(spark, tmp_path):
     """S2: Excel is edge ingest via driver-side pandas. With openpyxl
     present it round-trips; without it, a clean NotImplementedError."""

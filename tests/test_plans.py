@@ -130,6 +130,16 @@ def test_outlier_stats_join_is_broadcast_not_shuffle(lineitem):
     assert "SortMergeJoin" not in plan
 
 
+def test_replace_outliers_plan_has_no_join(lineitem):
+    """replace_outliers puts its z-score stats into the plan as literals:
+    later scans of the cleaned table re-run no stats aggregate."""
+    from etl_hero_spark.clean import replace_outliers
+
+    plan = plan_str(replace_outliers(lineitem, "l_extendedprice"))
+    assert "Join" not in plan
+    assert "CartesianProduct" not in plan
+
+
 def test_topk_cosine_broadcasts_query_side(spark, sf_dir):
     """Brute-force top-k must broadcast the (small) query side — the corpus
     never shuffles on content; only scored rows move through the tiny

@@ -840,6 +840,15 @@ def test_sq8_zero_vector_and_empty_queries(spark):
         topk_cosine_sq8(emb, zq, k=3)
 
 
+def test_ivfpq_indexed_rejects_empty_queries(spark, queries, ivfpq_path):
+    """Both IVF-PQ searches share the SQ8 rule: an empty query set
+    raises instead of returning an empty frame."""
+    with pytest.raises(ValueError, match="empty"):
+        simsearch.topk_cosine_ivfpq_indexed(
+            spark, queries.filter(F.lit(False)), ivfpq_path, k=3
+        )
+
+
 def test_sq8_codes_within_int8_range(spark):
     """sq_scale derives from the QUANTIZED cv, so codes are guaranteed
     in [-127, 127] — persisting them as tinyint cannot overflow. The
