@@ -51,7 +51,7 @@ def _base_dir() -> str:
 def session_tmpdir(prefix: str = "stage") -> str:
     """A fresh directory under the session checkpoint root, removed with
     it at process exit. Shared by parquet_checkpoint and the streaming
-    file-source staging (streaming/windows._events_stream_source)."""
+    file-source staging (streaming/windows._file_stream_source)."""
     d = os.path.join(_base_dir(), f"{prefix}{next(_counter)}")
     os.makedirs(d, exist_ok=True)
     return d

@@ -317,15 +317,13 @@ def overwrite_changed_partitions(
     day's correction rewrites one day's directory, not the table — the
     difference between an hourly refresh and an impossible one. Static
     overwrite mode (the default) would TRUNCATE the whole table first;
-    the conf is set for this write and restored after."""
-    spark = delta.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(key, "STATIC")
-    spark.conf.set(key, "dynamic")
-    try:
-        delta.write.mode("overwrite").partitionBy(part_col).parquet(path)
-    finally:
-        spark.conf.set(key, old)
+    the mode is a per-write option, so the session conf is untouched."""
+    (
+        delta.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(part_col)
+        .parquet(path)
+    )
 
 
 def overwrite_audit(before: dict, after: dict, touched: set) -> dict:

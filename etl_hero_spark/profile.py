@@ -1318,13 +1318,9 @@ def psi_reference(
             f"(min == max == {lo}) — degenerate edges cannot detect "
             "drift; pick a varying column or widen the snapshot"
         )
-    expr = _psi_bucket_expr(col, lo, hi, bins)
     counts = {
         r["bucket"]: r["cnt"]
-        for r in df.filter(F.col(col).isNotNull())
-        .groupBy(expr.alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
+        for r in psi_bucket_counts(df, col, lo, hi, bins).collect()
     }
     n = int(b["n"])
     return {
@@ -1335,6 +1331,19 @@ def psi_reference(
         "n": n,
         "shares": [counts.get(i, 0) / n for i in range(bins)],
     }
+
+
+def psi_bucket_counts(
+    df: DataFrame, col: str, lo: float, hi: float, bins: int
+) -> DataFrame:
+    """(bucket, cnt) over the non-null ``col`` values on fixed edges —
+    the count aggregate psi_reference fits the reference shares from and
+    the streaming PSI monitor keeps as its state."""
+    return (
+        df.filter(F.col(col).isNotNull())
+        .groupBy(_psi_bucket_expr(col, lo, hi, bins).alias("bucket"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
 
 
 def _psi_bucket_expr(col: str, lo: float, hi: float, bins: int):

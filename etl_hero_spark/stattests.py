@@ -153,26 +153,17 @@ def _two_group_values(
 # ---------------------------------------------------------------------------
 
 
-def welch_ttest(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    group_a,
-    group_b,
-    scale: int = 6,
+def welch_moments(
+    df: DataFrame, value_col: str, group_col: str, group_a, group_b
 ) -> DataFrame:
-    """Welch's unequal-variance t-test between two groups: one row
-    (n/mean/sample-variance per group, t statistic, Welch-Satterthwaite
-    degrees of freedom). ddof=1 variances — this is the inferential
-    test, unlike the profiler's population ddof=0.
-
-    ONE conditional multi-aggregate pass; sums and sums-of-squares
-    accumulate as exact decimals (inputs cast to (18,6) so the square
-    stays an unclamped (37,12) — see the decimal-moment note in
-    profile.py), so the statistic is order-independent and
-    engine-portable."""
-    d18 = "decimal(18,6)"
-    v = F.col(value_col).cast(d18)
+    """welch_ttest's moment step: ONE conditional multi-aggregate row
+    (n, Σx, Σx² per group — n_a, s_a, q_a, n_b, s_b, q_b). Sums and
+    sums-of-squares accumulate as exact decimals (inputs cast to (18,6)
+    so the square stays an unclamped (37,12) — see the decimal-moment
+    note in profile.py), so the moments are order-independent and
+    partial-aggregable: the streaming A/B monitor keeps this very row as
+    its state."""
+    v = F.col(value_col).cast("decimal(18,6)")
     in_a = F.col(group_col) == group_a
     in_b = F.col(group_col) == group_b
 
@@ -184,10 +175,17 @@ def welch_ttest(
             F.sum(x * x).alias(f"q_{tag}"),
         ]
 
-    agg = (
-        df.filter(F.col(value_col).isNotNull() & (in_a | in_b))
-        .agg(*_side(in_a, "a"), *_side(in_b, "b"))
+    return df.filter(F.col(value_col).isNotNull() & (in_a | in_b)).agg(
+        *_side(in_a, "a"), *_side(in_b, "b")
     )
+
+
+def welch_finalize(
+    moments: DataFrame, group_a, group_b, scale: int = 6
+) -> DataFrame:
+    """welch_ttest's finalize step over a welch_moments row: means,
+    ddof=1 variances, the t statistic and the Welch-Satterthwaite
+    degrees of freedom, rounded to ``scale``."""
 
     def _stats(tag):
         n = F.col(f"n_{tag}").cast("double")
@@ -205,7 +203,7 @@ def welch_ttest(
     df_w = (se2_a + se2_b) * (se2_a + se2_b) / (
         se2_a * se2_a / (n_a - 1) + se2_b * se2_b / (n_b - 1)
     )
-    return agg.select(
+    return moments.select(
         F.lit(str(group_a)).alias("group_a"),
         F.lit(str(group_b)).alias("group_b"),
         F.col("n_a").alias("n_a"),
@@ -216,6 +214,31 @@ def welch_ttest(
         F.round(var_b, scale).alias("var_b"),
         F.round(t, scale).alias("t_stat"),
         F.round(df_w, scale).alias("df_welch"),
+    )
+
+
+def welch_ttest(
+    df: DataFrame,
+    value_col: str,
+    group_col: str,
+    group_a,
+    group_b,
+    scale: int = 6,
+) -> DataFrame:
+    """Welch's unequal-variance t-test between two groups: one row
+    (n/mean/sample-variance per group, t statistic, Welch-Satterthwaite
+    degrees of freedom). ddof=1 variances — this is the inferential
+    test, unlike the profiler's population ddof=0.
+
+    ONE conditional multi-aggregate pass (welch_moments) with exact
+    decimal sums, then the closed-form arithmetic on that row
+    (welch_finalize), so the statistic is order-independent and
+    engine-portable."""
+    return welch_finalize(
+        welch_moments(df, value_col, group_col, group_a, group_b),
+        group_a,
+        group_b,
+        scale,
     )
 
 

@@ -3,9 +3,16 @@
 The reference has no streaming surface; these are the mandated extension:
 windowed aggregates (tumbling/sliding), sessionization, JSON prop
 extraction, and windowed data-quality metrics — each written
-batch-first with identical semantics under Structured Streaming
-(`stream_tumbling_agg` runs the same plan through readStream/writeStream
-with a watermark; tests assert batch == stream).
+batch-first with identical semantics under Structured Streaming.
+
+A Structured Streaming twin is its batch operator applied to a file
+stream from the shared stager (`_file_stream_source`, or
+`_events_stream_source` for the events table), then one `_drain` into a
+memory sink; tests assert batch == stream. The exceptions are the
+`applyInPandasWithState` twins (gaps, funnel, scd2, ewma, transition):
+their state machines are order-dependent folds with no batch expression
+to share, so they carry their own update function and still drain
+through `_drain`.
 
 Scale notes: tumbling/sliding aggs are single-shuffle grouped aggs keyed
 by (window, type) — partial aggregation map-side, no skew (time is
@@ -20,7 +27,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from etl_hero_spark.profile import dec_avg, dec_sum
+from etl_hero_spark.profile import (
+    countmin_sketch,
+    dec_avg,
+    dec_sum,
+    quantile_sketch,
+)
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -169,47 +181,55 @@ def windowed_quality_metrics(
 
 
 # ---------------------------------------------------------------------------
-# true Structured Streaming twin
+# true Structured Streaming twins: the shared stager and drain
 # ---------------------------------------------------------------------------
 
 # staging dirs for the file-stream source, one per (fixture path, n_links)
 _STREAM_SRC_DIRS: dict = {}
 
 
-def _events_stream_source(
-    spark: SparkSession, path: str, prefix: str, n_links: int = 1
+def _file_stream_source(
+    spark: SparkSession, path: str, n_links: int = 1
 ) -> DataFrame:
-    """File-stream source over the events parquet with `ts` normalized to
-    TimestampType, adapting to the fixture's physical ts type (see
-    registry._events: legacy TIMESTAMP(NANOS) read as long under
-    nanosAsLong, current TIMESTAMP(MICROS) read as TIMESTAMP_NTZ). The
-    file source requires a directory, so the single fixture file is
+    """File-stream source over one parquet file, schema from the file's
+    OWN footer (a hardcoded schema would make a renamed/retyped fixture
+    silently read as NULLs through the file stream source instead of
+    failing). The file source requires a directory, so the file is
     exposed through n_links temp-dir symlinks (n_links>1 makes every
-    event arrive that many times — real duplicates for dedup tests).
+    row arrive that many times — real duplicates for dedup tests).
 
-    The staging dir is cached per (path, n_links) — 7 streaming queries
-    route through here, and a fresh mkdtemp per call would accumulate
-    directories across a long session — and lives under the session
-    checkpoint root, which atexit removes.
+    The staging dir is cached per (path, n_links) — every twin routes
+    through here, and a fresh dir per call would accumulate directories
+    across a long session — and lives under the session checkpoint
+    root, which atexit removes.
     """
     import os
 
     from etl_hero_spark.checkpoint import session_tmpdir
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_type = spark.read.parquet(path).schema["ts"].dataType.simpleString()
-    schema = (
-        f"event_id long, ts {ts_type}, user_id long, event_type string, "
-        "value double, props string"
-    )
-    key = (os.path.realpath(path), n_links)
+    real = os.path.realpath(path)
+    key = (real, n_links)
     d = _STREAM_SRC_DIRS.get(key)
     if d is None:
-        d = session_tmpdir(prefix)
+        d = session_tmpdir("etl_hero_stream_")
+        # link the absolute target: a relative one would dangle from the
+        # staging dir and the stream would drain zero rows
         for i in range(n_links):
-            os.symlink(path, os.path.join(d, f"{i}_{os.path.basename(path)}"))
+            os.symlink(real, os.path.join(d, f"{i}_{os.path.basename(path)}"))
         _STREAM_SRC_DIRS[key] = d
-    src = spark.readStream.schema(schema).parquet(d)
+    return spark.readStream.schema(spark.read.parquet(real).schema).parquet(d)
+
+
+def _events_stream_source(
+    spark: SparkSession, path: str, n_links: int = 1
+) -> DataFrame:
+    """_file_stream_source over the events parquet with `ts` normalized
+    to TimestampType, adapting to the fixture's physical ts type (see
+    registry._events: legacy TIMESTAMP(NANOS) read as long under
+    nanosAsLong, current TIMESTAMP(MICROS) read as TIMESTAMP_NTZ)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    src = _file_stream_source(spark, path, n_links)
+    ts_type = src.schema["ts"].dataType.simpleString()
     if ts_type == "bigint":
         return src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     if ts_type != "timestamp":
@@ -217,49 +237,60 @@ def _events_stream_source(
     return src
 
 
-def stream_tumbling_agg(
-    spark: SparkSession,
-    sf_dir: str,
-    size: str = "1 hour",
-    watermark: str = "2 hours",
-    query_name: str = "etl_hero_stream_out",
+def _drain(
+    df: DataFrame, mode: str, query_name: str, no_data_batches: bool = True
 ) -> DataFrame:
-    """Run tumbling_agg as a real Structured Streaming query over the
-    events parquet (file source), complete mode into a memory sink,
-    drained synchronously. Returns the sink table — identical rows to the
-    batch tumbling_agg (asserted in tests).
+    """Run a streaming DataFrame into the memory sink ``query_name`` in
+    output ``mode``, process everything available, stop, and return the
+    sink table.
 
-    The watermark bounds state for append sinks/late data in production;
-    with the finite fixture + complete mode it is exercised but does not
-    drop anything.
-    """
-    src = _events_stream_source(
-        spark, sf_dir, "etl_hero_stream_"
-    ).withWatermark("ts", watermark)
-    agg = (
-        src.groupBy(F.window("ts", size), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dec_sum("value", "sum_value"),
-        )
-        .select(
-            _window_start_str().alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
+    ``no_data_batches=False`` drops the trailing no-data micro-batches
+    for THIS query only. Spark snapshots the session conf into the
+    query's cloned session when start() builds it, so the conf is set
+    false around start() alone and restored right after — a query
+    started later in the session keeps its no-data batches (pinned in
+    tests/test_streaming.py)."""
+    spark = df.sparkSession
+    writer = (
+        df.writeStream.outputMode(mode).format("memory").queryName(query_name)
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    if no_data_batches:
+        q = writer.start()
+    else:
+        key = "spark.sql.streaming.noDataMicroBatches.enabled"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            q = writer.start()
+        finally:
+            spark.conf.set(key, prev)
     try:
         q.processAllAvailable()
     finally:
         q.stop()
     return spark.table(query_name)
+
+
+def stream_tumbling_agg(
+    spark: SparkSession,
+    events_path: str,
+    size: str = "1 hour",
+    watermark: str = "2 hours",
+    query_name: str = "etl_hero_stream_out",
+) -> DataFrame:
+    """tumbling_agg as a real Structured Streaming query over the events
+    parquet (file source), complete mode into a memory sink, drained
+    synchronously. Returns the sink table — identical rows to the batch
+    tumbling_agg (asserted in tests).
+
+    The watermark bounds state for append sinks/late data in production;
+    with the finite fixture + complete mode it is exercised but does not
+    drop anything.
+    """
+    src = _events_stream_source(spark, events_path).withWatermark(
+        "ts", watermark
+    )
+    return _drain(tumbling_agg(src, size), "complete", query_name)
 
 
 def session_agg_native(
@@ -292,7 +323,7 @@ def session_agg_native(
 
 def stream_session_agg(
     spark: SparkSession,
-    sf_dir: str,
+    events_path: str,
     gap: str = "30 minutes",
     watermark: str = "0 seconds",
     query_name: str = "etl_hero_stream_sessions",
@@ -306,27 +337,15 @@ def stream_session_agg(
     streaming answer for an unbounded source. Tests assert emitted
     sessions == the batch result restricted to closed sessions.
     """
-    src = (
-        _events_stream_source(spark, sf_dir, "etl_hero_stream_sess_")
-        .withWatermark("ts", watermark)
+    src = _events_stream_source(spark, events_path).withWatermark(
+        "ts", watermark
     )
-    agg = session_agg_native(src, gap=gap)
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
+    return _drain(session_agg_native(src, gap=gap), "append", query_name)
 
 
 def stream_dedup(
     spark: SparkSession,
-    sf_dir: str,
+    events_path: str,
     key: str = "event_id",
     watermark: str = "2 hours",
     query_name: str = "etl_hero_stream_dedup",
@@ -341,9 +360,9 @@ def stream_dedup(
     the source dir), so every event arrives twice and the operator has
     real duplicates to drop; tests assert output == the distinct batch.
     """
-    src = _events_stream_source(
-        spark, sf_dir, "etl_hero_stream_dup_", n_links=2
-    ).withWatermark("ts", watermark)
+    src = _events_stream_source(spark, events_path, n_links=2).withWatermark(
+        "ts", watermark
+    )
     deduped = src.dropDuplicatesWithinWatermark([key]).select(
         "event_id",
         "user_id",
@@ -351,17 +370,7 @@ def stream_dedup(
         "event_type",
         "value",
     )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
+    return _drain(deduped, "append", query_name)
 
 
 # ---------------------------------------------------------------------------
@@ -436,7 +445,7 @@ def user_gap_stats_batch(events: DataFrame) -> DataFrame:
 
 def stream_user_gap_stats(
     spark: SparkSession,
-    sf_dir: str,
+    events_path: str,
     query_name: str = "etl_hero_stream_gaps",
 ) -> DataFrame:
     """user_gap_stats as a TRUE custom stateful streaming operator via
@@ -481,9 +490,9 @@ def stream_user_gap_stats(
 
     # hand pandas an int64 µs epoch column — unit-stable regardless of
     # which physical ts type the fixture carries
-    src = _events_stream_source(
-        spark, sf_dir, "etl_hero_stream_gaps_"
-    ).withColumn("ts", F.unix_micros("ts"))
+    src = _events_stream_source(spark, events_path).withColumn(
+        "ts", F.unix_micros("ts")
+    )
     out = src.groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType=_GAPS_SCHEMA,
@@ -491,25 +500,13 @@ def stream_user_gap_stats(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # update mode appends one row per (user, batch); the LAST emission per
     # user is the final state
-    sink = spark.table(query_name)
-    from pyspark.sql import functions as SF
-
-    w = W.partitionBy("user_id").orderBy(SF.desc("n_events"))
+    sink = _drain(out, "update", query_name)
+    w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
-        sink.withColumn("_r", SF.row_number().over(w))
-        .filter(SF.col("_r") == 1)
+        sink.withColumn("_r", F.row_number().over(w))
+        .filter(F.col("_r") == 1)
         .drop("_r")
     )
 
@@ -670,7 +667,7 @@ def stream_funnel_counts(
         yield pd.DataFrame({"user_id": [key[0]], "stage": [stage]})
 
     src = (
-        _events_stream_source(spark, events_path, "etl_hero_stream_funnel_")
+        _events_stream_source(spark, events_path)
         .withColumn("ts", F.unix_micros("ts"))
         .filter(F.col("event_type").isin(steps))
     )
@@ -681,19 +678,9 @@ def stream_funnel_counts(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # update mode: one row per (user, batch); stage is monotone, so the
     # MAX emission per user is the final state
-    sink = spark.table(query_name)
+    sink = _drain(out, "update", query_name)
     final = sink.groupBy("user_id").agg(F.max("stage").alias("stage"))
     return final.agg(
         *[
@@ -762,56 +749,42 @@ def stream_contract_monitor(
     watermark: str = "2 hours",
     query_name: str = "etl_hero_stream_contract",
 ) -> DataFrame:
-    """contract_monitor_batch as a TRUE Structured Streaming query:
-    the same sum-of-when counters as a watermark-bounded windowed
-    aggregate over the file stream, complete mode into a memory sink,
-    drained synchronously. Per-window state is one long per rule
-    regardless of event volume; NOTE complete mode retains every
-    window's row forever (the finite-fixture twin shape) — on a real
-    unbounded source switch to update mode so the watermark evicts
-    closed windows, at the cost of reading the sink's last emission
-    per window. NULL-ts events land in the epoch-zero sentinel window
-    (same coalesce as the batch twin) — under a watermark that window
-    is permanently late, which complete mode tolerates but
-    update/append modes would drop."""
-    src = (
-        _events_stream_source(spark, events_path, "etl_hero_stream_contract_")
-        .withColumn("ts", F.coalesce(F.col("ts"), F.timestamp_seconds(F.lit(0))))
-        .withWatermark("ts", watermark)
+    """contract_monitor_batch as a TRUE Structured Streaming query: the
+    batch operator's sum-of-when counters as a windowed aggregate over
+    the file stream, complete mode into a memory sink, drained
+    synchronously. Per-window state is one long per rule regardless of
+    event volume; NOTE complete mode retains every window's row forever
+    (the finite-fixture twin shape) — on a real unbounded source switch
+    to update mode, with the watermark on the window column, so it
+    evicts closed windows. NULL-ts events land in the epoch-zero
+    sentinel window (the batch operator's coalesce), which complete mode
+    keeps."""
+    # the watermark sits on the raw ts: the batch operator re-projects ts
+    # through its null-ts coalesce, and complete mode evicts nothing anyway
+    src = _events_stream_source(spark, events_path).withWatermark(
+        "ts", watermark
     )
-    agg = src.groupBy(F.window("ts", window_size)).agg(
-        *[
-            F.sum(F.when(r.cond, 1).otherwise(0))
-            .cast("bigint")
-            .alias(r.name)
-            for r in rules
-        ]
+    return _drain(
+        contract_monitor_batch(src, rules, window_size), "complete", query_name
     )
-    out = agg.select(
-        _window_start_str().alias("window_start"),
-        F.expr(
-            "stack({n}, {pairs}) as (rule, n_violations)".format(
-                n=len(rules),
-                pairs=", ".join(f"'{r.name}', `{r.name}`" for r in rules),
-            )
-        ),
-    )
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
 
 
 # ---------------------------------------------------------------------------
 # latest-state upsert view (streaming materialized view maintenance)
 # ---------------------------------------------------------------------------
+
+
+def _latest_by_key(events: DataFrame, key: str) -> DataFrame:
+    """latest_state_batch's one max_by aggregate, plus the key's max
+    event_id as ``_eid`` — the streaming twin orders its update-mode
+    emissions by it."""
+    ordk = F.struct(F.col("ts"), F.col("event_id"))
+    return events.groupBy(key).agg(
+        F.date_format(F.max_by("ts", ordk), _TS_FMT).alias("ts_s"),
+        F.max_by("event_type", ordk).alias("event_type"),
+        F.max_by("value", ordk).alias("value"),
+        F.max("event_id").alias("_eid"),
+    )
 
 
 def latest_state_batch(events: DataFrame, key: str = "user_id") -> DataFrame:
@@ -821,48 +794,25 @@ def latest_state_batch(events: DataFrame, key: str = "user_id") -> DataFrame:
     the unique (ts, event_id) order key makes the argmax deterministic.
     This is cdc.merge_upsert specialized to an event stream with no
     tombstones."""
-    ordk = F.struct(F.col("ts"), F.col("event_id"))
-    return events.groupBy(key).agg(
-        F.date_format(F.max_by("ts", ordk), _TS_FMT).alias("ts_s"),
-        F.max_by("event_type", ordk).alias("event_type"),
-        F.max_by("value", ordk).alias("value"),
-        F.max("event_id").alias("_max_eid"),
-    ).drop("_max_eid")
+    return _latest_by_key(events, key).drop("_eid")
 
 
 def stream_latest_state(
     spark: SparkSession,
-    sf_dir: str,
+    events_path: str,
     query_name: str = "etl_hero_stream_latest",
 ) -> DataFrame:
-    """TRUE streaming twin of latest_state_batch: an update-mode
-    streaming aggregate whose state is exactly one row per key — the
-    materialized upsert view, maintained incrementally as micro-batches
-    arrive. Built-in max_by keeps this fully JVM-side (no Python state
-    op needed); state size is the view size, the inherent floor for
-    view maintenance, so no watermark is required. Each micro-batch
-    emits only keys it touched (update mode); the final view is each
-    key's LAST emission, recovered by ordering emissions by their own
-    (ts_s, state) order key."""
-    src = _events_stream_source(spark, sf_dir, "etl_hero_stream_latest_")
-    ordk = F.struct(F.col("ts"), F.col("event_id"))
-    latest = src.groupBy("user_id").agg(
-        F.date_format(F.max_by("ts", ordk), _TS_FMT).alias("ts_s"),
-        F.max_by("event_type", ordk).alias("event_type"),
-        F.max_by("value", ordk).alias("value"),
-        F.max("event_id").alias("_eid"),
-    )
-    q = (
-        latest.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sink = spark.table(query_name)
+    """TRUE streaming twin of latest_state_batch: its max_by aggregate as
+    an update-mode streaming aggregate whose state is exactly one row
+    per key — the materialized upsert view, maintained incrementally as
+    micro-batches arrive. Built-in max_by keeps this fully JVM-side (no
+    Python state op needed); state size is the view size, the inherent
+    floor for view maintenance, so no watermark is required. Each
+    micro-batch emits only keys it touched (update mode); the final view
+    is each key's LAST emission, recovered by ordering emissions by
+    (ts_s, _eid)."""
+    src = _events_stream_source(spark, events_path)
+    sink = _drain(_latest_by_key(src, "user_id"), "update", query_name)
     w = W.partitionBy("user_id").orderBy(
         F.col("ts_s").desc(), F.col("_eid").desc()
     )
@@ -880,7 +830,7 @@ def stream_latest_state(
 
 def stream_quantile_sketch(
     spark: SparkSession,
-    sf_dir: str,
+    events_path: str,
     col: str = "value",
     lo: float = 0.0,
     hi: float = 100.0,
@@ -893,27 +843,10 @@ def stream_quantile_sketch(
     rows), the inherent floor, so no watermark is needed and the sketch
     is queryable at any point mid-stream. Final state == the batch
     sketch bit-for-bit (bin counts are exact adds; pinned in tests)."""
-    src = _events_stream_source(spark, sf_dir, "etl_hero_stream_qs_")
-    b = F.width_bucket(
-        F.col(col).cast("double"), F.lit(float(lo)), F.lit(float(hi)),
-        F.lit(n_bins),
+    src = _events_stream_source(spark, events_path)
+    return _drain(
+        quantile_sketch(src, col, lo, hi, n_bins), "complete", query_name
     )
-    sk = (
-        src.filter(F.col(col).isNotNull())
-        .groupBy(b.cast("int").alias("bin"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    q = (
-        sk.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
 
 
 # ---------------------------------------------------------------------------
@@ -928,7 +861,7 @@ _SCD2_SCHEMA = (
 
 def stream_scd2_history(
     spark: SparkSession,
-    sf_dir: str,
+    events_path: str,
     query_name: str = "etl_hero_stream_scd2",
 ) -> DataFrame:
     """TRUE streaming twin of cdc.scd2_history over the event stream:
@@ -973,9 +906,9 @@ def stream_scd2_history(
             columns=["user_id", "state", "effective_from", "effective_to"],
         )
 
-    src = _events_stream_source(
-        spark, sf_dir, "etl_hero_stream_scd2_"
-    ).withColumn("ts", F.unix_micros("ts"))
+    src = _events_stream_source(spark, events_path).withColumn(
+        "ts", F.unix_micros("ts")
+    )
     out = src.groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType=_SCD2_SCHEMA,
@@ -983,17 +916,7 @@ def stream_scd2_history(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
+    return _drain(out, "append", query_name)
 
 
 def merge_hourly_delta(base_hourly: DataFrame, delta_events: DataFrame) -> DataFrame:
@@ -1068,78 +991,36 @@ def stream_attribution_join(
     watermark: str = "2 hours",
     query_name: str = "etl_hero_stream_attr",
 ) -> DataFrame:
-    """attribution_join_batch as a TRUE stream-stream inner join: both
-    sides read the unbounded file stream, both carry watermarks, and the
-    join condition's two-sided time bound is what lets Spark EVICT
-    state — a view's state row dies once the watermark passes
-    view_ts + horizon, a purchase's once it can no longer match any
-    retained view. Inner joins emit on match arrival (the watermark
-    gates state size, not emission), so after draining a finite source
-    the sink equals the batch join exactly — pinned in tests.
+    """attribution_join_batch as a TRUE stream-stream inner join: the
+    batch operator over the watermarked file stream — both join sides
+    are the unbounded stream, both time columns inherit the watermark
+    of the ts they alias, and the join condition's two-sided time bound
+    is what lets Spark EVICT state — a view's state row dies once the
+    watermark passes view_ts + horizon, a purchase's once it can no
+    longer match any retained view. Inner joins emit on match arrival
+    (the watermark gates state size, not emission), so after draining a
+    finite source the sink equals the batch join exactly — pinned in
+    tests.
 
-    No-data micro-batches are disabled FOR THIS QUERY (restored after
-    the drain): an INNER stream-stream join emits only on match
-    arrival, so the trailing empty batch exists purely to evict state
-    — it can never add a sink row — yet it reloads and recommits every
-    join state store (4 per shuffle partition; measured ~4 s of the
-    ~10 s drain at sf0.1 processing ZERO rows). Window aggregations
+    No-data micro-batches are disabled FOR THIS QUERY (_drain's
+    no_data_batches=False): an INNER stream-stream join emits only on
+    match arrival, so the trailing empty batch exists purely to evict
+    state — it can never add a sink row — yet it reloads and recommits
+    every join state store (4 per shuffle partition; measured ~4 s of
+    the ~10 s drain at sf0.1 processing ZERO rows). Window aggregations
     under append mode DO need their no-data batch (final windows emit
-    when the watermark passes), which is why this is scoped here and
-    not set session-wide.
+    when the watermark passes), which is why this is scoped to the one
+    query and not set session-wide.
     """
-    src = _events_stream_source(spark, events_path, "etl_hero_stream_attr_")
-    v = (
-        src.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", watermark)
+    src = _events_stream_source(spark, events_path).withWatermark(
+        "ts", watermark
     )
-    p = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", watermark)
+    return _drain(
+        attribution_join_batch(src, horizon),
+        "append",
+        query_name,
+        no_data_batches=False,
     )
-    joined = v.join(
-        p,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("view_ts") + F.expr(f"INTERVAL {horizon}")
-        ),
-    ).select(
-        F.col("v_user").alias("user_id"),
-        "view_id",
-        "purchase_id",
-        F.date_format("view_ts", _TS_FMT).alias("view_ts"),
-        F.date_format("purchase_ts", _TS_FMT).alias("purchase_ts"),
-        F.round(F.col("purchase_value"), 2).alias("purchase_value"),
-    )
-    conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_conf = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "false")
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set(conf_key, prev_conf)
-    return spark.table(query_name)
 
 
 # ---------------------------------------------------------------------------
@@ -1191,19 +1072,10 @@ def stream_enriched_events(
     DataFrame Spark re-evaluates per micro-batch (dimension refreshes
     propagate without restarting the query). Stateless — no watermark,
     nothing to evict; the drained sink equals the batch join exactly."""
-    src = _events_stream_source(spark, events_path, "etl_hero_stream_enr_")
-    enriched = enrich_events_batch(src, baselines, factor)
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    src = _events_stream_source(spark, events_path)
+    return _drain(
+        enrich_events_batch(src, baselines, factor), "append", query_name
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
 
 
 # ---------------------------------------------------------------------------
@@ -1213,7 +1085,7 @@ def stream_enriched_events(
 
 def stream_countmin_sketch(
     spark: SparkSession,
-    sf_dir: str,
+    events_path: str,
     col: str = "event_type",
     width: int = 1024,
     depth: int = 4,
@@ -1231,36 +1103,10 @@ def stream_countmin_sketch(
     pinned in tests/test_streaming.py along with point-estimate
     correctness: est >= exact always, est == exact when width >>
     cardinality)."""
-    src = _events_stream_source(spark, sf_dir, "etl_hero_stream_cms_")
-    c = F.col(col).cast("string")
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("j"),
-                F.pmod(F.xxhash64(c, F.lit(seed + j)), F.lit(width))
-                .cast("int")
-                .alias("b"),
-            )
-            for j in range(depth)
-        ]
+    src = _events_stream_source(spark, events_path)
+    return _drain(
+        countmin_sketch(src, col, width, depth, seed), "complete", query_name
     )
-    sk = (
-        src.filter(c.isNotNull())
-        .select(F.explode(cells).alias("cell"))
-        .groupBy(F.col("cell.j").alias("j"), F.col("cell.b").alias("b"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    q = (
-        sk.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
 
 
 # ---------------------------------------------------------------------------
@@ -1274,7 +1120,7 @@ _EWMA_SCHEMA = (
 
 def stream_ewma(
     spark: SparkSession,
-    sf_dir: str,
+    events_path: str,
     alpha: float = 0.3,
     query_name: str = "etl_hero_stream_ewma",
 ) -> DataFrame:
@@ -1318,9 +1164,9 @@ def stream_ewma(
             }
         )
 
-    src = _events_stream_source(
-        spark, sf_dir, "etl_hero_stream_ewma_"
-    ).withColumn("ts", F.unix_micros("ts"))
+    src = _events_stream_source(spark, events_path).withColumn(
+        "ts", F.unix_micros("ts")
+    )
     out = src.groupBy("user_id", "event_type").applyInPandasWithState(
         update,
         outputStructType=_EWMA_SCHEMA,
@@ -1328,17 +1174,7 @@ def stream_ewma(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sink = spark.table(query_name)
+    sink = _drain(out, "update", query_name)
     w = W.partitionBy("user_id", "event_type").orderBy(F.desc("n_points"))
     return (
         sink.withColumn("_r", F.row_number().over(w))
@@ -1391,9 +1227,9 @@ def stream_transition_matrix(
         state.update((last_ts, last_eid, last_type))
         yield pd.DataFrame(steps, columns=["from_state", "to_state"])
 
-    src = _events_stream_source(
-        spark, path, "etl_hero_stream_trans_"
-    ).withColumn("ts", F.unix_micros("ts"))
+    src = _events_stream_source(spark, path).withColumn(
+        "ts", F.unix_micros("ts")
+    )
     out = src.groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType="from_state string, to_state string",
@@ -1401,17 +1237,7 @@ def stream_transition_matrix(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    steps = spark.table(query_name)
+    steps = _drain(out, "append", query_name)
     counts = steps.groupBy("from_state", "to_state").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -1445,98 +1271,26 @@ def stream_ab_monitor(
     query_name: str = "etl_hero_stream_ab",
 ) -> DataFrame:
     """TRUE streaming twin of stattests.welch_ttest — the live A/B
-    significance monitor: the conditional decimal moment sums
+    significance monitor: welch_moments' conditional decimal moment sums
     (n, Σx, Σx² per arm) are plain streaming aggregates in complete
     mode, so state is ONE six-field row regardless of stream volume —
     the floor for any two-sample monitor — and every micro-batch
-    refreshes the t statistic incrementally. The Welch arithmetic runs
-    on the final state exactly as the batch form runs on its one agg
-    row, so stream == batch bit-for-bit (pinned in tests).
+    refreshes the t statistic incrementally. welch_finalize runs on the
+    drained state exactly as the batch form runs on its one agg row, so
+    stream == batch bit-for-bit (pinned in tests).
     """
-    src = _events_stream_source(spark, path, "etl_hero_stream_ab_")
-    d18 = "decimal(18,6)"
-    v = F.col(value_col).cast(d18)
-    in_a = F.col(group_col) == group_a
-    in_b = F.col(group_col) == group_b
+    from etl_hero_spark.stattests import welch_finalize, welch_moments
 
-    def _side(cond, tag):
-        x = F.when(cond, v)
-        return [
-            F.count(x).alias(f"n_{tag}"),
-            F.sum(x).alias(f"s_{tag}"),
-            F.sum(x * x).alias(f"q_{tag}"),
-        ]
-
-    agg = src.filter(F.col(value_col).isNotNull() & (in_a | in_b)).agg(
-        *_side(in_a, "a"), *_side(in_b, "b")
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    m = spark.table(query_name)
-
-    def _stats(tag):
-        n = F.col(f"n_{tag}").cast("double")
-        s = F.col(f"s_{tag}").cast("double")
-        qq = F.col(f"q_{tag}").cast("double")
-        return n, s / n, (qq - s * s / n) / (n - F.lit(1.0))
-
-    n_a, mean_a, var_a = _stats("a")
-    n_b, mean_b, var_b = _stats("b")
-    ea, eb = var_a / n_a, var_b / n_b
-    t = (mean_a - mean_b) / F.sqrt(ea + eb)
-    df_w = (ea + eb) * (ea + eb) / (
-        ea * ea / (n_a - 1) + eb * eb / (n_b - 1)
-    )
-    return m.select(
-        F.lit(group_a).alias("group_a"),
-        F.lit(group_b).alias("group_b"),
-        F.col("n_a"),
-        F.col("n_b"),
-        F.round(mean_a, 6).alias("mean_a"),
-        F.round(mean_b, 6).alias("mean_b"),
-        F.round(var_a, 6).alias("var_a"),
-        F.round(var_b, 6).alias("var_b"),
-        F.round(t, 6).alias("t_stat"),
-        F.round(df_w, 6).alias("df_welch"),
+    src = _events_stream_source(spark, path)
+    moments = welch_moments(src, value_col, group_col, group_a, group_b)
+    return welch_finalize(
+        _drain(moments, "complete", query_name), group_a, group_b
     )
 
 
 # ---------------------------------------------------------------------------
 # streaming quality-aware dedup survivor view (16th twin)
 # ---------------------------------------------------------------------------
-
-
-def _docs_stream_source(
-    spark: SparkSession, path: str, prefix: str = "etl_hero_stream_docs_"
-) -> DataFrame:
-    """File-stream source over the documents parquet (plain types — no
-    ts normalization needed; same cached symlink-dir staging as the
-    events source). The stream schema comes from the file's OWN parquet
-    footer (one driver metadata read) — a hardcoded schema would make a
-    renamed/retyped documents fixture silently read as NULLs through
-    the file stream source and emit a wrong survivor table instead of
-    failing."""
-    import os
-
-    key = (os.path.realpath(path), "docs")
-    d = _STREAM_SRC_DIRS.get(key)
-    if d is None:
-        from etl_hero_spark.checkpoint import session_tmpdir
-
-        d = session_tmpdir(prefix)
-        os.symlink(path, os.path.join(d, os.path.basename(path)))
-        _STREAM_SRC_DIRS[key] = d
-    return spark.readStream.schema(
-        spark.read.parquet(path).schema
-    ).parquet(d)
 
 
 def stream_keep_best(
@@ -1557,19 +1311,8 @@ def stream_keep_best(
     shared expression, not a re-implementation."""
     from etl_hero_spark.dedup import keep_best_ids
 
-    src = _docs_stream_source(spark, docs_path)
-    agg = keep_best_ids(src, quality)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
+    src = _file_stream_source(spark, docs_path)
+    return _drain(keep_best_ids(src, quality), "complete", query_name)
 
 
 def stream_media_triage(
@@ -1592,21 +1335,12 @@ def stream_media_triage(
         synth_gif_webp_media,
     )
 
-    src = _docs_stream_source(spark, docs_path).select(
+    src = _file_stream_source(spark, docs_path).select(
         "doc_id", synth_gif_webp_media("doc_id").alias("media")
     )
-    agg = gif_webp_format_counts(src, "doc_id")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    return _drain(
+        gif_webp_format_counts(src, "doc_id"), "complete", query_name
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
 
 
 def stream_quality_score(
@@ -1641,7 +1375,7 @@ def stream_quality_score(
     # twice per row instead of twice per row PER BUCKET (dim x fewer
     # interpreted hash evaluations in the hot streaming projection)
     src = (
-        _docs_stream_source(spark, docs_path)
+        _file_stream_source(spark, docs_path)
         .withColumn(
             "_hf_pairs", hashed_token_pairs_expr("text", dim, ngrams)
         )
@@ -1654,17 +1388,7 @@ def stream_quality_score(
     scored = logreg_apply(src, model, out_col="quality_p").select(
         "doc_id", "source", F.round("quality_p", 9).alias("quality_p")
     )
-    q = (
-        scored.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
+    return _drain(scored, "append", query_name)
 
 
 def stream_psi_monitor(
@@ -1678,59 +1402,23 @@ def stream_psi_monitor(
     of psi_drift: the reference's frozen bucket edges and shares
     (profile.psi_reference — production monitors never re-derive edges
     from the live feed) score the arriving stream. The stream side is
-    ONE complete-mode aggregate whose state is the <= bins-row bucket
-    count table (the monitor itself, queryable mid-stream); PSI
+    profile.psi_bucket_counts — the count aggregate psi_reference fits
+    its shares from — as ONE complete-mode aggregate whose state is the
+    <= bins-row bucket count table (the monitor itself, queryable
+    mid-stream); PSI
     finalizes on the drained bounded table via the SAME
     psi_from_counts arithmetic the batch twin uses — stream == batch
     is a statement about one expression. Returns the one-row PSI
     report."""
-    from etl_hero_spark.profile import _psi_bucket_expr, psi_from_counts
+    from etl_hero_spark.profile import psi_bucket_counts, psi_from_counts
 
-    src = _events_stream_source(spark, events_path, "etl_hero_stream_psi_")
+    src = _events_stream_source(spark, events_path)
     if live_pred is not None:
         src = src.filter(live_pred)
-    col = ref["col"]
-    agg = (
-        src.filter(F.col(col).isNotNull())
-        .groupBy(
-            _psi_bucket_expr(col, ref["lo"], ref["hi"], ref["bins"]).alias(
-                "bucket"
-            )
-        )
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    counts = psi_bucket_counts(
+        src, ref["col"], ref["lo"], ref["hi"], ref["bins"]
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return psi_from_counts(spark.table(query_name), ref)
-
-
-def _emb_stream_source(
-    spark: SparkSession, path: str, prefix: str = "etl_hero_stream_emb_"
-) -> DataFrame:
-    """File-stream source over the embeddings parquet — schema from the
-    file's own footer (the _docs_stream_source contract: a retyped
-    fixture must fail loudly, not read as NULLs)."""
-    import os
-
-    key = (os.path.realpath(path), "emb")
-    d = _STREAM_SRC_DIRS.get(key)
-    if d is None:
-        from etl_hero_spark.checkpoint import session_tmpdir
-
-        d = session_tmpdir(prefix)
-        os.symlink(path, os.path.join(d, os.path.basename(path)))
-        _STREAM_SRC_DIRS[key] = d
-    return spark.readStream.schema(
-        spark.read.parquet(path).schema
-    ).parquet(d)
+    return psi_from_counts(_drain(counts, "complete", query_name), ref)
 
 
 def stream_ann_probe(
@@ -1751,8 +1439,8 @@ def stream_ann_probe(
     The stream pass is STATELESS (zero state store, append mode, no
     watermark): each arriving query assigns to its nprobe nearest
     coarse lists via the centroid-literal expression (map-only — the
-    stored model re-enters the plan as literals, the kmeans-assign
-    posture), explodes to (query, list_id) probes, and STREAM-STATIC
+    stored model, read once by simsearch.read_index_model, re-enters
+    the plan as literals, the kmeans-assign posture), explodes to (query, list_id) probes, and STREAM-STATIC
     inner-joins the list_id-partitioned assignment table, scoring
     candidates map-side. Exactly like the batch probe, only the
     probed lists' partitions are read per micro-batch.
@@ -1767,17 +1455,12 @@ def stream_ann_probe(
         cosine_expr,
         nearest_lists_expr,
         quantized_vec,
+        read_index_model,
     )
 
-    cent_rows = sorted(
-        spark.read.parquet(f"{index_path}/centroids").collect(),
-        key=lambda r: r["list_id"],
-    )
-    centroids = [list(r["centroid"]) for r in cent_rows]
-    quantize = cent_rows[0]["quantize"]
-    quantize = None if quantize < 0 else quantize
+    centroids, _books, quantize, _meta = read_index_model(spark, index_path)
     nprobe = min(nprobe, len(centroids))
-    src = _emb_stream_source(spark, emb_path)
+    src = _file_stream_source(spark, emb_path)
     if query_pred is not None:
         src = src.filter(query_pred)
     probes = src.select(
@@ -1793,21 +1476,11 @@ def stream_ann_probe(
         "corpus_id",
         F.round(cosine_expr(F.col("cv"), F.col("qv")), 6).alias("score"),
     )
-    q = (
-        scored.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     w = W.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("corpus_id")
     )
     return (
-        spark.table(query_name)
+        _drain(scored, "append", query_name)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "corpus_id", "score", "rank")
@@ -1853,9 +1526,7 @@ def stream_ann_maintain(
     from etl_hero_spark.simsearch import append_ivf_batch, read_index_model
 
     model = read_index_model(spark, index_path)
-    src = _emb_stream_source(
-        spark, emb_path, "etl_hero_stream_ann_maint_"
-    )
+    src = _file_stream_source(spark, emb_path)
     if new_pred is not None:
         src = src.filter(new_pred)
 

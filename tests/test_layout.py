@@ -266,6 +266,44 @@ def test_overwrite_audit_raises_on_unexpected_rewrite(spark, events, tmp_path):
         overwrite_audit(before, after, {last_day, untouched})
 
 
+def test_partition_overwrite_leaves_session_conf_alone(
+    spark, events, tmp_path, monkeypatch
+):
+    """Dynamic overwrite is a per-write option: the function never
+    writes the session conf (a conf.set that raises would surface), and
+    still replaces only the touched partition."""
+    from etl_hero_spark.layout import (
+        overwrite_audit,
+        overwrite_changed_partitions,
+        partition_file_index,
+        write_partitioned,
+    )
+
+    ev = events.select(
+        "event_id", "value", F.date_format("ts", "yyyy-MM-dd").alias("day")
+    )
+    path = str(tmp_path / "ptable3")
+    write_partitioned(ev, path, "day")
+    before = partition_file_index(spark, path)
+    last_day = ev.agg(F.max("day")).first()[0]
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+
+    def _no_set(*_a, **_k):
+        raise AssertionError("session conf written")
+
+    monkeypatch.setattr(spark.conf, "set", _no_set)
+    overwrite_changed_partitions(
+        ev.filter(F.col("day") == last_day), path, "day"
+    )
+    monkeypatch.undo()
+    after = partition_file_index(spark, path)
+    audit = overwrite_audit(before, after, {last_day})
+    assert audit["n_rewritten"] == 1
+    assert audit["n_preserved"] == len(before) - 1
+    assert spark.conf.get(key) == prior
+
+
 def test_bucketed_memo_revalidates_against_catalog(spark, sf_dir):
     """A memo hit is only honored while the current session's catalog
     still knows the table — after a drop (stand-in for a session

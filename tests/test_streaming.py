@@ -374,9 +374,9 @@ def test_events_readers_adapt_to_legacy_nanos_fixture(spark, tmp_path, events):
     # stream source over the same legacy file: drain into a memory
     # sink and compare VALUES (a dtype check alone would not catch a
     # wrong ns->us divisor)
-    src = _events_stream_source(
-        spark, str(d / "events.parquet"), "t_legacy_"
-    ).select("event_id", "ts")
+    src = _events_stream_source(spark, str(d / "events.parquet")).select(
+        "event_id", "ts"
+    )
     assert dict(src.dtypes)["ts"] == "timestamp"
     q = (
         src.writeStream.outputMode("append")
@@ -393,6 +393,88 @@ def test_events_readers_adapt_to_legacy_nanos_fixture(spark, tmp_path, events):
         for r in spark.table("t_legacy_sink").collect()
     }
     assert stream_vals == want
+
+
+def test_stream_stager_memoizes_per_path_and_links(
+    spark, tmp_path, monkeypatch
+):
+    """Every twin stages its file through one memo keyed by (realpath,
+    n_links): a second source over the same path reuses the staging dir,
+    and n_links=2 gets its own dir with two links. A relative path
+    stages a link that resolves, so the stream drains every row."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_hero_spark.streaming.windows import (
+        _STREAM_SRC_DIRS,
+        _drain,
+        _file_stream_source,
+    )
+
+    p = str(tmp_path / "rows.parquet")
+    pq.write_table(pa.table({"id": pa.array([1, 2, 3], pa.int64())}), p)
+    n_before = len(_STREAM_SRC_DIRS)
+    monkeypatch.chdir(tmp_path)
+    rel = _file_stream_source(spark, "rows.parquet")
+    one = _STREAM_SRC_DIRS[(os.path.realpath(p), 1)]
+    assert _drain(rel, "append", "t_stager_rel").count() == 3
+    assert dict(_file_stream_source(spark, p).dtypes) == {"id": "bigint"}
+    assert _STREAM_SRC_DIRS[(os.path.realpath(p), 1)] == one
+    _file_stream_source(spark, p, n_links=2)
+    two = _STREAM_SRC_DIRS[(os.path.realpath(p), 2)]
+    assert two != one
+    assert len(_STREAM_SRC_DIRS) == n_before + 2
+    assert sorted(os.listdir(one)) == ["0_rows.parquet"]
+    assert sorted(os.listdir(two)) == ["0_rows.parquet", "1_rows.parquet"]
+
+
+def test_drain_no_data_flip_is_scoped_to_start(spark, tmp_path):
+    """_drain(no_data_batches=False) sets the conf false only around
+    start(): the query keeps that setting (Spark snapshots the conf when
+    it builds the query), so a watermarked append-mode window
+    aggregation drains NO rows — its final windows need the no-data
+    batch. The session conf reads its prior value afterwards, and a
+    default drain started next emits its closed windows."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_hero_spark.streaming.windows import (
+        _drain,
+        _events_stream_source,
+    )
+
+    base = dt.datetime(2024, 1, 1, 0, 10)
+    ts = [base + dt.timedelta(hours=h) for h in range(5)]
+    tbl = pa.table(
+        {
+            "event_id": pa.array(range(5), pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "user_id": pa.array([1] * 5, pa.int64()),
+            "event_type": pa.array(["view"] * 5),
+            "value": pa.array([1.0] * 5, pa.float64()),
+            "props": pa.array(["{}"] * 5),
+        }
+    )
+    p = str(tmp_path / "events.parquet")
+    pq.write_table(tbl, p)
+
+    def windows():
+        src = _events_stream_source(spark, p).withWatermark("ts", "0 seconds")
+        return src.groupBy(F.window("ts", "1 hour")).agg(
+            F.count(F.lit(1)).alias("n")
+        )
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prior = spark.conf.get(key)
+    off = _drain(windows(), "append", "t_drain_nodata_off", no_data_batches=False)
+    assert off.count() == 0
+    assert spark.conf.get(key) == prior
+    on = _drain(windows(), "append", "t_drain_nodata_on")
+    assert on.count() == 4
 
 
 def test_contract_monitor_counts_null_ts_events(spark):
@@ -570,9 +652,7 @@ def test_deterministic_samplers_identical_under_streaming(spark, sf_dir, events)
     }
     from etl_hero_spark.streaming.windows import _events_stream_source
 
-    src = _events_stream_source(
-        spark, f"{sf_dir}/events.parquet", "etl_hero_stream_samp_"
-    )
+    src = _events_stream_source(spark, f"{sf_dir}/events.parquet")
     out = with_split(
         weighted_hash_sample(src.withColumn("w", F.lit(0.3)), "w", "event_id"),
         "event_id",
@@ -614,9 +694,7 @@ def test_pii_redaction_identical_under_streaming(spark, sf_dir, events):
     }
     from etl_hero_spark.streaming.windows import _events_stream_source
 
-    src = _events_stream_source(
-        spark, f"{sf_dir}/events.parquet", "etl_hero_stream_pii_"
-    ).withColumn(
+    src = _events_stream_source(spark, f"{sf_dir}/events.parquet").withColumn(
         "text",
         F.concat(
             F.lit("contact a@b.io or 123-45-6789 ref "),
