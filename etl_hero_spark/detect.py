@@ -1,10 +1,12 @@
 """Detection operators — the reference's "missions" (P2-P5, app.py:210-237).
 
-Each detector is lazy: it returns either a DataFrame of findings or a
-flagged copy of the input (extra boolean column). Scalar statistics reach
-the row-level predicate through a broadcast 1-row stats DataFrame
-(crossJoin) — a map-side-only plan with no driver round-trip, so a
-detect -> remediate chain stays ONE job end-to-end at any scale.
+Each detector returns either a DataFrame of findings or a flagged copy
+of the input (extra boolean column). ``with_outlier_flags`` and
+``detect_missions`` reach their z-score statistics through a broadcast
+1-row stats DataFrame (crossJoin): building them runs no job, and the
+stats execute inside the one query that uses them. ``detect_outliers``
+and ``detect_outliers_iqr`` run their stats first (concurrent per-column
+jobs) and fold them into the counting scan as literals.
 """
 
 from __future__ import annotations
@@ -12,12 +14,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_hero_spark.features import _dlit
 from etl_hero_spark.profile import (
     dec_avg,
     dec_stddev_pop,
     duplicate_count,
     null_counts,
     numeric_columns,
+    sql_dec_avg,
+    sql_dec_std,
+    sql_ident,
+    sql_str,
+    string_columns,
 )
 
 DEFAULT_ZSCORE_THRESHOLD = 3.0  # reference default, app.py:62
@@ -104,7 +112,7 @@ def detect_outliers(
     import math
 
     cols = cols or numeric_columns(df)
-    stats = zscore_stats_map(df, cols)
+    stats = zscore_stats_map(df, cols) if cols else {}
 
     def usable(s):
         mu, sigma = s
@@ -135,7 +143,7 @@ def detect_outliers(
         ]
     )
     # unpivot the 1-row wide result into (column, n_outliers)
-    stack_expr = ", ".join(f"'{c}', {c}" for c in active)
+    stack_expr = ", ".join(f"{sql_str(c)}, {sql_ident(c)}" for c in active)
     return wide.selectExpr(
         f"stack({len(active)}, {stack_expr}) as (column, n_outliers)"
     )
@@ -150,7 +158,7 @@ def detect_missing(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """(column, n_null) for columns with at least one NULL (app.py:225-228)."""
     cols = cols or df.columns
     wide = null_counts(df, cols)
-    stack_expr = ", ".join(f"'{c}', n_null_{c}" for c in cols)
+    stack_expr = ", ".join(f"{sql_str(c)}, {sql_ident('n_null_' + c)}" for c in cols)
     return (
         wide.selectExpr(f"stack({len(cols)}, {stack_expr}) as (column, n_null)")
         .filter(F.col("n_null") > 0)
@@ -191,9 +199,13 @@ def date_likeness(
     """(column, n_total, n_parsed, parse_ratio, is_date_like, is_mixed) per
     string column. is_date_like: ratio > 0.6 (app.py:205); is_mixed:
     0 < n_parsed < n_non_null (app.py:236)."""
-    from etl_hero_spark.profile import string_columns
-
     cols = cols if cols is not None else string_columns(df)
+    if not cols:
+        return df.sparkSession.createDataFrame(
+            [],
+            "column string, n_total bigint, n_parsed bigint, "
+            "parse_ratio double, is_date_like boolean, is_mixed boolean",
+        )
     aggs: list[Column] = []
     for c in cols:
         parsed = parse_date_expr(c, formats)
@@ -202,7 +214,9 @@ def date_likeness(
             F.count(parsed).alias(f"p_{c}"),
         ]
     wide = df.agg(*aggs)
-    stack_expr = ", ".join(f"'{c}', n_{c}, p_{c}" for c in cols)
+    stack_expr = ", ".join(
+        f"{sql_str(c)}, {sql_ident('n_' + c)}, {sql_ident('p_' + c)}" for c in cols
+    )
     long = wide.selectExpr(
         f"stack({len(cols)}, {stack_expr}) as (column, n_total, n_parsed)"
     )
@@ -231,40 +245,76 @@ def detect_missions(
 ) -> DataFrame:
     """All four mission classes in one DataFrame:
     (mission, column, metric). Empty result == "no problems found"
-    (app.py:240)."""
-    out = (
-        detect_outliers(df, threshold=zscore_threshold)
-        .filter(F.col("n_outliers") > 0)
-        .select(
-            F.lit("outliers").alias("mission"),
-            "column",
-            F.col("n_outliers").cast("bigint").alias("metric"),
+    (app.py:240). Rows and their order are those of the union of
+    detect_outliers (n_outliers > 0), detect_missing, detect_duplicates
+    (n_duplicates > 0) and date_likeness (is_mixed, metric n_total -
+    n_parsed) — pinned against that union in tests/test_detect.py.
+
+    ONE lazy query; building it runs no job. groupBy(all columns).count()
+    is the duplicate count's one shuffle; every other metric is a
+    function of the group key, so one global aggregate of sums weighted
+    by the group count ``_cnt`` yields them all: NULLs per column,
+    sum(_cnt - 1) duplicates, parsed/non-NULL counts per string column,
+    and z-score outliers per numeric column. mu/sigma come from a 1-row
+    dec_avg/dec_stddev_pop subquery over ``df`` broadcast onto the
+    groups; a sigma NULL, 0 or NaN counts no outliers. One stack
+    unpivots the aggregate. Expressions are SQL text (one py4j call per
+    projection, not per Column node)."""
+    cols = df.columns
+    q = {c: sql_ident(c) for c in cols}
+    nums = numeric_columns(df)
+    groups = df.groupBy(*[F.col(q[c]) for c in cols]).agg(
+        F.count(F.lit(1)).alias("_cnt")
+    )
+    if nums:
+        stats = df.selectExpr(
+            *[
+                e
+                for i, c in enumerate(nums)
+                for e in (
+                    f"{sql_dec_avg(q[c])} AS __mu{i}",
+                    f"{sql_dec_std(q[c])} AS __sd{i}",
+                )
+            ]
         )
-    )
-    missing = detect_missing(df).select(
-        F.lit("missing").alias("mission"),
-        "column",
-        F.col("n_null").cast("bigint").alias("metric"),
-    )
-    dups = (
-        detect_duplicates(df)
-        .filter(F.col("n_duplicates") > 0)
-        .select(
-            F.lit("duplicates").alias("mission"),
-            F.lit("*").alias("column"),
-            F.col("n_duplicates").cast("bigint").alias("metric"),
+        groups = groups.crossJoin(F.broadcast(stats))
+
+    def weighted(cond: str) -> str:
+        return f"sum(CASE WHEN {cond} THEN _cnt ELSE 0 END)"
+
+    thr = _dlit(zscore_threshold)
+    cells = [
+        (
+            "outliers",
+            c,
+            f"sum(CASE WHEN __sd{i} = 0 OR isnan(__sd{i}) THEN 0 "
+            f"WHEN abs(({q[c]} - __mu{i}) / __sd{i}) > {thr} THEN _cnt "
+            "ELSE 0 END)",
         )
-    )
-    mixed = (
-        date_likeness(df, formats=date_formats)
-        .filter(F.col("is_mixed"))
-        .select(
-            F.lit("date_mixed").alias("mission"),
-            "column",
-            (F.col("n_total") - F.col("n_parsed")).cast("bigint").alias("metric"),
+        for i, c in enumerate(nums)
+    ]
+    cells += [("missing", c, weighted(f"{q[c]} IS NULL")) for c in cols]
+    cells.append(("duplicates", "*", "sum(_cnt - 1)"))
+    for c in string_columns(df):
+        parsed = ", ".join(
+            f"try_to_date({q[c]}, {sql_str(f)})"
+            for f in date_formats or DEFAULT_DATE_FORMATS
         )
+        n = weighted(f"{q[c]} IS NOT NULL")
+        p = weighted(f"coalesce({parsed}) IS NOT NULL")
+        cells.append(
+            ("date_mixed", c, f"CASE WHEN {p} > 0 AND {p} < {n} THEN {n} - {p} END")
+        )
+    wide = groups.selectExpr(
+        *[f"CAST({m} AS BIGINT) AS __m{k}" for k, (_, _, m) in enumerate(cells)]
     )
-    return out.unionByName(missing).unionByName(dups).unionByName(mixed)
+    stack = ", ".join(
+        f"{sql_str(mission)}, {sql_str(c)}, __m{k}"
+        for k, (mission, c, _) in enumerate(cells)
+    )
+    return wide.selectExpr(
+        f"stack({len(cells)}, {stack}) AS (mission, column, metric)"
+    ).filter("metric > 0")
 
 
 def detect_anomalies_mad(

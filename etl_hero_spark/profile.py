@@ -79,6 +79,42 @@ def dec_stddev_pop(col: str | Column, alias: str | None = None, scale: int = 6) 
 
 
 # ---------------------------------------------------------------------------
+# SQL text fragments: one F.expr/selectExpr string costs one py4j call where
+# the Column API costs one per node. sql_dec_* mirror dec_* above (keep in
+# lockstep); ``c`` is SQL text, so pass a column NAME through sql_ident.
+# ---------------------------------------------------------------------------
+
+
+def sql_ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier (spaces, quotes,
+    dots and backticks in uploaded headers all survive)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(value: str) -> str:
+    """A Python string as an escaped single-quoted SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_dec_sum(c: str, scale: int = 2) -> str:
+    return f"round(cast(sum(cast({c} as decimal(18,2))) as double), {scale})"
+
+
+def sql_dec_avg(c: str, scale: int = 6) -> str:
+    return (
+        f"round(cast(sum(cast({c} as decimal(18,2))) as double)"
+        f" / cast(count({c}) as double), {scale})"
+    )
+
+
+def sql_dec_std(c: str, scale: int = 6) -> str:
+    sx = f"cast(sum(cast({c} as decimal(18,2))) as double)"
+    sx2 = f"cast(sum(cast({c} as decimal(18,2)) * cast({c} as decimal(18,2))) as double)"
+    n = f"cast(count({c}) as double)"
+    return f"round(sqrt({sx2}/{n} - ({sx}/{n})*({sx}/{n})), {scale})"
+
+
+# ---------------------------------------------------------------------------
 # A1/A3 null counts — one pass for all columns
 # ---------------------------------------------------------------------------
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from etl_hero_spark.profile import sql_dec_avg, sql_dec_std, sql_dec_sum
 from etl_hero_spark.session import ensure_oracle_safe_conf
 
 # Numeric lineitem columns used by the profiling pack (l_linenumber is int,
@@ -123,28 +124,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     if ts_type != "timestamp":  # timestamp_ntz fixture
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-# ---------------------------------------------------------------------------
-# SQL fragments mirroring profile.dec_* (keep in lockstep with profile.py)
-# ---------------------------------------------------------------------------
-
-def sql_dec_sum(c: str, scale: int = 2) -> str:
-    return f"round(cast(sum(cast({c} as decimal(18,2))) as double), {scale})"
-
-
-def sql_dec_avg(c: str, scale: int = 6) -> str:
-    return (
-        f"round(cast(sum(cast({c} as decimal(18,2))) as double)"
-        f" / cast(count({c}) as double), {scale})"
-    )
-
-
-def sql_dec_std(c: str, scale: int = 6) -> str:
-    sx = f"cast(sum(cast({c} as decimal(18,2))) as double)"
-    sx2 = f"cast(sum(cast({c} as decimal(18,2)) * cast({c} as decimal(18,2))) as double)"
-    n = f"cast(count({c}) as double)"
-    return f"round(sqrt({sx2}/{n} - ({sx}/{n})*({sx}/{n})), {scale})"
 
 
 # ===========================================================================

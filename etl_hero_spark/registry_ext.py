@@ -19,8 +19,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from etl_hero_spark.profile import dec_sum
-from etl_hero_spark.registry import _t, register, sql_dec_avg, sql_dec_sum
+from etl_hero_spark.profile import dec_sum, sql_dec_avg, sql_dec_sum
+from etl_hero_spark.registry import _t, register
 
 # ---------------------------------------------------------------------------
 # DuckDB SQL fragments (lockstep with textops.py expressions)

@@ -15,7 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_hero_spark.registry import _events, _t, register, sql_dec_sum
+from etl_hero_spark.profile import sql_dec_sum
+from etl_hero_spark.registry import _events, _t, register
 from etl_hero_spark.registry_ext2 import _GAPFILL_SQL
 
 _STRF = "%Y-%m-%d %H:%M:%S"

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_hero_spark.profile import null_counts
+from etl_hero_spark.profile import null_counts, sql_ident
 
 # reference weights, app.py:88-91
 _BASE, _W_NULL, _W_DUP = 50.0, 0.5, 1.0
@@ -23,35 +23,44 @@ def quality_score_df(before: DataFrame, after: DataFrame) -> DataFrame:
     """Lazy single-row variant: (nulls_before, dups_before, nulls_after,
     dups_after, quality_score) — oracle-checkable as one SQL expression.
 
-    Each table's two counts come from the one groupBy-all-columns that
-    duplicate_count runs: n_duplicates = sum(cnt - 1) and nulls =
-    sum(cnt * nulls in the group key). NULL keys group together, so the
-    second sum equals null_counts' n_null_total."""
+    One query: each table is grouped by its own columns (the one shuffle
+    duplicate_count runs) into partials (tag, _cnt * key NULLs, _cnt - 1),
+    the two partials are unioned (their schemas may differ; the partials'
+    do not), and one conditional aggregate sums them per tag — no join.
+    NULL keys group together, so the NULL sum equals null_counts'
+    n_null_total; an empty table contributes no partial and reads 0."""
 
-    def one(df: DataFrame, tag: str) -> DataFrame:
-        cols = df.columns
-        key_nulls = sum(F.col(c).isNull().cast("bigint") for c in cols)
-        groups = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("_cnt"))
-        return groups.agg(
-            F.coalesce(F.sum(F.col("_cnt") * key_nulls), F.lit(0))
-            .cast("bigint")
-            .alias(f"nulls_{tag}"),
-            F.coalesce(F.sum(F.col("_cnt") - 1), F.lit(0))
-            .cast("bigint")
-            .alias(f"dups_{tag}"),
+    def partial(df: DataFrame, tag: str) -> DataFrame:
+        key_nulls = " + ".join(
+            f"CAST({sql_ident(c)} IS NULL AS BIGINT)" for c in df.columns
+        )
+        return (
+            df.groupBy(*[F.col(sql_ident(c)) for c in df.columns])
+            .agg(F.count(F.lit(1)).alias("_cnt"))
+            .selectExpr(
+                f"'{tag}' AS _tag",
+                f"_cnt * ({key_nulls or '0'}) AS _nulls",
+                "_cnt - 1 AS _dups",
+            )
         )
 
-    joined = one(before, "before").crossJoin(one(after, "after"))
+    sums = [
+        f"CAST(coalesce(sum(CASE WHEN _tag = '{tag}' THEN _{kind} END), 0) "
+        f"AS BIGINT) AS {kind}_{tag}"
+        for tag in ("before", "after")
+        for kind in ("nulls", "dups")
+    ]
     raw = (
-        F.lit(_BASE)
-        + F.lit(_W_NULL)
-        * F.greatest(F.lit(0), F.col("nulls_before") - F.col("nulls_after"))
-        + F.lit(_W_DUP)
-        * F.greatest(F.lit(0), F.col("dups_before") - F.col("dups_after"))
+        f"{_BASE}D + {_W_NULL}D * greatest(0, nulls_before - nulls_after)"
+        f" + {_W_DUP}D * greatest(0, dups_before - dups_after)"
     )
-    return joined.withColumn(
-        "quality_score",
-        F.round(F.least(F.lit(100.0), F.greatest(F.lit(0.0), raw)), 2),
+    return (
+        partial(before, "before")
+        .unionByName(partial(after, "after"))
+        .selectExpr(*sums)
+        .selectExpr(
+            "*", f"round(least(100.0D, greatest(0.0D, {raw})), 2) AS quality_score"
+        )
     )
 
 

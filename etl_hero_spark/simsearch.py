@@ -549,7 +549,7 @@ def topk_cosine_ivf_indexed(
     table — the corpus embeddings are never rescanned. Same output as
     topk_cosine_ivf with the same centroids (asserted in tests)."""
     centroids, _books, quantize, _meta = read_index_model(spark, path)
-    index = spark.read.parquet(f"{path}/lists")
+    index = _read_index_table(spark, f"{path}/lists", _IVF_LISTS)
     nprobe = min(nprobe, len(centroids))
     return _ivf_probe_rerank(
         index, queries, centroids, k, nprobe, query_id_col, vec_col, quantize
@@ -1117,7 +1117,7 @@ def _ivfpq_probe(
         qv_data, f"query_id {qid_type}, qv array<double>"
     )
     probed_lists = sorted({p[1] for p in probe_data})
-    codes = spark.read.parquet(f"{path}/codes").filter(
+    codes = _read_index_table(spark, f"{path}/codes", _IVFPQ_CODES).filter(
         F.col("list_id").isin(probed_lists)
     )
     adc = pq_adc_score_expr("codes", "tabs", mm)
@@ -1691,7 +1691,7 @@ def topk_cosine_ivfsq8_indexed(
     ).collect()
     if not qrows:
         raise ValueError("queries is empty")
-    codes_all = spark.read.parquet(f"{path}/codes")
+    codes_all = _read_index_table(spark, f"{path}/codes", _IVFSQ8_CODES)
     per_query = []
     probed_union: set = set()
     for r in qrows:
@@ -1922,6 +1922,37 @@ def _check_index_kind(meta: dict | None, expected: str, fn: str) -> None:
             f"{fn}: index at this path is kind={meta['kind']!r}, not "
             f"{expected!r} — appending would mix incompatible layouts"
         )
+
+
+# the list_id-partitioned sub-tables' columns (pinned in
+# tests/test_simsearch.py::test_persisted_layouts_are_pinned), for reading
+# an index built from an empty corpus
+_IVF_LISTS = "corpus_id bigint, cv array<double>, list_id int"
+_IVFPQ_CODES = (
+    "corpus_id bigint, codes array<int>, cnorm double, cv array<double>, "
+    "list_id int"
+)
+_IVFSQ8_CODES = (
+    "corpus_id bigint, cv array<double>, sq_scale double, "
+    "sq_codes array<int>, cnorm double, list_id int"
+)
+
+
+def _read_index_table(spark, path: str, empty_schema: str) -> DataFrame:
+    """A persisted list_id-partitioned index sub-table. Written from an
+    EMPTY corpus it holds no data file (a partitioned write of no rows
+    leaves only _SUCCESS), which parquet schema inference rejects; it
+    then reads as an empty ``empty_schema`` table, so a search over it
+    returns no rows. (The corpus id type is not recorded anywhere in
+    that case; bigint stands in.)"""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        return spark.createDataFrame([], empty_schema)
 
 
 def read_index_model(spark, path: str, with_books: bool = False):

@@ -1,8 +1,10 @@
 """Detection operator tests (P2-P5) — edge cases from FIXTURES.md §C."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from etl_hero_spark import detect
+from etl_hero_spark.io import messy_orders
 
 
 def test_zscore_zero_variance_no_outliers(spark):
@@ -63,8 +65,6 @@ def test_detect_missions_clean_table_empty(spark):
 
 
 def test_detect_missions_messy_orders(spark):
-    from etl_hero_spark.io import messy_orders
-
     df = messy_orders(spark)
     rows = {(r["mission"], r["column"]): r["metric"] for r in detect.detect_missions(df).collect()}
     # FIXTURES.md §B expectations: price outlier mission, category nulls,
@@ -73,6 +73,90 @@ def test_detect_missions_messy_orders(spark):
     assert ("missing", "category") in rows
     assert rows[("duplicates", "*")] == 2
     assert rows[("date_mixed", "date")] == 1
+
+
+def _missions_union(df, zscore_threshold=detect.DEFAULT_ZSCORE_THRESHOLD, date_formats=None):
+    """The four per-class detectors, unioned in mission order — the rows
+    (and their order) detect_missions' single query must reproduce."""
+    parts = [
+        detect.detect_outliers(df, threshold=zscore_threshold)
+        .filter("n_outliers > 0")
+        .selectExpr("'outliers'", "column", "n_outliers"),
+        detect.detect_missing(df).selectExpr("'missing'", "column", "n_null"),
+        detect.detect_duplicates(df)
+        .filter("n_duplicates > 0")
+        .selectExpr("'duplicates'", "'*'", "n_duplicates"),
+        detect.date_likeness(df, formats=date_formats)
+        .filter("is_mixed")
+        .selectExpr("'date_mixed'", "column", "n_total - n_parsed"),
+    ]
+    return [tuple(r) for part in parts for r in part.collect()]
+
+
+_MISSION_FRAMES = {
+    "messy_orders": messy_orders,
+    "constant_numeric": lambda s: s.createDataFrame(
+        [(5.0, "a")] * 6 + [(5.0, None)], "x double, s string"
+    ),
+    "all_null_numeric": lambda s: s.createDataFrame(
+        [(None, 1.0), (None, 2.0), (None, 2.0)], "x double, y double"
+    ),
+    "nan_value": lambda s: s.createDataFrame(
+        [(float(i),) for i in range(30)] + [(float("nan"),), (None,)], "x double"
+    ),
+    "duplicates_with_nulls": lambda s: s.createDataFrame(
+        [(1, None, "2024-01-01")] * 2 + [(None, None, None)] * 3 + [(2, 3.5, "x")],
+        "a long, b double, c string",
+    ),
+    "no_numeric": lambda s: s.createDataFrame(
+        [("a", "2024-01-01"), (None, "x"), ("a", "2024-01-01")], "s string, d string"
+    ),
+    "no_string": lambda s: s.createDataFrame(
+        [(i, float(i)) for i in range(40)] + [(1, 1.0), (1000, 1e6), (None, 3.0)],
+        "a long, b double",
+    ),
+    "empty": lambda s: s.createDataFrame([], "a long, b double, c string"),
+}
+
+
+@pytest.mark.parametrize(
+    "frame, kwargs",
+    [pytest.param(name, {}, id=name) for name in _MISSION_FRAMES]
+    + [
+        pytest.param(
+            "messy_orders",
+            {"zscore_threshold": 1.5, "date_formats": ["MM-dd-yyyy", "dd/MM/yyyy"]},
+            id="messy_orders-custom",
+        ),
+        pytest.param("nan_value", {"zscore_threshold": 1.5}, id="nan_value-custom"),
+    ],
+)
+def test_detect_missions_equals_per_class_union(spark, frame, kwargs):
+    df = _MISSION_FRAMES[frame](spark)
+    got = detect.detect_missions(df, **kwargs)
+    assert got.schema.simpleString() == "struct<mission:string,column:string,metric:bigint>"
+    assert [tuple(r) for r in got.collect()] == _missions_union(df, **kwargs)
+
+
+def test_detectors_quote_column_names(spark):
+    """Uploaded CSV headers carry spaces and quotes; every detector must
+    treat them as names, not SQL text."""
+    rows = [(50.0 + i % 5, f"2024-01-0{1 + i % 9}") for i in range(40)]
+    rows += [(5000.0, "05/01/2024"), (None, "garbage"), (None, None)]
+    df = spark.createDataFrame(rows, "`unit price` double, `o'date` string")
+    assert [tuple(r) for r in detect.detect_outliers(df).collect()] == [("unit price", 1)]
+    assert [tuple(r) for r in detect.detect_missing(df).collect()] == [
+        ("unit price", 2),
+        ("o'date", 1),
+    ]
+    dates = detect.date_likeness(df).first()
+    assert (dates["column"], dates["n_total"], dates["n_parsed"]) == ("o'date", 42, 41)
+    assert [tuple(r) for r in detect.detect_missions(df).collect()] == [
+        ("outliers", "unit price", 1),
+        ("missing", "unit price", 2),
+        ("missing", "o'date", 1),
+        ("date_mixed", "o'date", 1),
+    ]
 
 
 def test_mad_anomalies_semantics(spark):

@@ -74,6 +74,71 @@ def test_quality_score_no_change_is_50(spark):
     assert quality_score(df, df) == 50.0
 
 
+def _quality_score_crossjoin(before, after):
+    """quality_score_df's earlier formula — two two-stage aggregates
+    cross-joined — as the reference for the one-union form."""
+
+    def one(df, tag):
+        key_nulls = sum(F.col(c).isNull().cast("bigint") for c in df.columns)
+        groups = df.groupBy(*df.columns).agg(F.count(F.lit(1)).alias("_cnt"))
+        return groups.agg(
+            F.coalesce(F.sum(F.col("_cnt") * key_nulls), F.lit(0))
+            .cast("bigint")
+            .alias(f"nulls_{tag}"),
+            F.coalesce(F.sum(F.col("_cnt") - 1), F.lit(0))
+            .cast("bigint")
+            .alias(f"dups_{tag}"),
+        )
+
+    raw = (
+        F.lit(50.0)
+        + F.lit(0.5) * F.greatest(F.lit(0), F.col("nulls_before") - F.col("nulls_after"))
+        + F.lit(1.0) * F.greatest(F.lit(0), F.col("dups_before") - F.col("dups_after"))
+    )
+    return (
+        one(before, "before")
+        .crossJoin(one(after, "after"))
+        .withColumn(
+            "quality_score",
+            F.round(F.least(F.lit(100.0), F.greatest(F.lit(0.0), raw)), 2),
+        )
+    )
+
+
+@pytest.mark.parametrize(
+    "case", ["after_drops_column", "after_adds_column", "before_empty", "after_empty"]
+)
+def test_quality_score_df_matches_crossjoin_formula(spark, case):
+    from etl_hero_spark.score import quality_score_df
+
+    df = spark.createDataFrame(
+        [(1, None, "a")] * 3 + [(None, None, None)] * 2 + [(2, 3.5, "b")],
+        "a long, b double, c string",
+    )
+    before, after = {
+        "after_drops_column": (df, df.drop("b")),
+        "after_adds_column": (df, df.withColumn("z", F.lit(None).cast("int"))),
+        "before_empty": (df.limit(0), df),
+        "after_empty": (df, df.limit(0)),
+    }[case]
+    got, want = quality_score_df(before, after), _quality_score_crossjoin(before, after)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def test_detectors_without_numeric_or_string_columns(spark):
+    """A table with no numeric (or no string) column has nothing to
+    z-score (or date-parse): those detectors return an empty result."""
+    from etl_hero_spark.detect import date_likeness, detect_missions, detect_outliers
+
+    text = spark.createDataFrame([("a", "2024-01-01"), ("a", "x")], "s string, d string")
+    nums = spark.createDataFrame([(1, 2.0), (1, 2.0)], "a long, b double")
+    assert detect_outliers(text).collect() == []
+    assert date_likeness(nums).collect() == []
+    assert [tuple(r) for r in detect_missions(text).collect()] == [("date_mixed", "d", 1)]
+    assert [tuple(r) for r in detect_missions(nums).collect()] == [("duplicates", "*", 1)]
+
+
 def test_sessionize_empty_events(spark):
     from etl_hero_spark.streaming import sessionize_batch
 

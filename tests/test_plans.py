@@ -130,6 +130,41 @@ def test_outlier_stats_join_is_broadcast_not_shuffle(lineitem):
     assert "SortMergeJoin" not in plan
 
 
+def test_detect_missions_is_one_lazy_query(spark):
+    """Building detect_missions runs no job (its z-score stats are a
+    broadcast 1-row subquery, not an eager collect); its one shuffle is
+    the groupBy over all columns, and a collect stays a handful of jobs."""
+    from etl_hero_spark.detect import detect_missions
+    from etl_hero_spark.io import messy_orders
+
+    df = messy_orders(spark)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    missions = detect_missions(df)
+    j1 = dag.nextJobId()
+    assert j1 == j0
+    plan = plan_str(missions, "simple")
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "BroadcastExchange" in plan
+    missions.collect()
+    assert dag.nextJobId() - j1 <= 5
+
+
+def test_quality_score_df_is_one_union_without_join(spark):
+    """Both tables' partials meet in one union and one aggregate: no
+    nested-loop join of two aggregates, at most 4 jobs per collect."""
+    from etl_hero_spark.io import messy_orders
+    from etl_hero_spark.score import quality_score_df
+
+    df = messy_orders(spark)
+    score = quality_score_df(df, df.dropDuplicates())
+    assert "BroadcastNestedLoopJoin" not in plan_str(score)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    score.collect()
+    assert dag.nextJobId() - j0 <= 4
+
+
 def test_replace_outliers_plan_has_no_join(lineitem):
     """replace_outliers puts its z-score stats into the plan as literals:
     later scans of the cleaned table re-run no stats aggregate."""

@@ -1434,6 +1434,16 @@ def test_append_empty_batch_is_a_noop(spark, emb, queries, tmp_path):
     )
     grown = str(tmp_path / "e_ivfsq8")
     write_ivfsq8_index(none, grown, centroids=cents)
+    # each empty layout searches to an empty result with the usual columns
+    for search, p in (
+        (topk_cosine_ivf_indexed, "e_ivf"),
+        (simsearch.topk_cosine_ivfpq_indexed, "e_ivfpq"),
+        (simsearch.topk_cosine_ivfpq_residual_indexed, "e_res"),
+        (simsearch.topk_cosine_ivfsq8_indexed, "e_ivfsq8"),
+    ):
+        found = search(spark, queries, str(tmp_path / p), k=5, nprobe=2)
+        assert found.columns == ["query_id", "corpus_id", "score", "rank"]
+        assert found.collect() == [], p
     append_ivfsq8_batch(emb, grown)
 
     def probe(p):
